@@ -1,10 +1,19 @@
-.PHONY: test bench verify plans lint
+.PHONY: test test-full bench bench-wat verify plans lint
 
 test:
 	python -m pytest tests/ -q
 
+# every tier, the slow codec/property suites included
+test-full:
+	python -m pytest tests/ -q -m "slow or not slow"
+
 bench:
 	python bench.py
+
+# untraced WAT -> parquet pipeline benchmark runs (perfbench/README.md)
+bench-wat:
+	python3 perfbench/run.py --workload wat_image --seed 1 --seconds 5 --trace 0
+	python3 perfbench/run.py --workload wat_text --seed 1 --seconds 5 --trace 0
 
 verify:
 	cd /tmp && python $(CURDIR)/tools/driver_sim.py

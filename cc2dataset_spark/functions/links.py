@@ -5,10 +5,10 @@ Reference semantics: /root/reference/cc2dataset/main.py:23-131 (predicates
 and projections), main.py:104-114 (absolutization), main.py:157-164 (base
 URL), main.py:166-176 (scheme filter, uid, provenance). Everything is a
 JVM-side expression except RFC-3986 ``urljoin``, which has no Spark
-built-in and is the pipeline's one Python (pandas/Arrow) UDF — and it is
-only ever applied to the minority of rows whose URL is relative, via a
-split/union plan rather than a per-row conditional (a Python UDF inside
-``when()`` would still be evaluated for every row by BatchEvalPython).
+built-in: scalar kernels :func:`resolve_base` and :func:`join_url` define
+it, and :func:`absolute_http_urls` fuses them with the scheme filter into
+the pipeline's one Python (pandas/Arrow) UDF, so each link crosses into
+Python once over a single source scan (a split/union plan scans twice).
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
+from pyspark.sql.types import ArrayType, StringType
 
 VIDEO_EXTS = (".avi", ".mp4", ".mkv", ".webm", ".mov", ".mpg", ".mpeg", ".m4v")
 AUDIO_EXTS = (".ogg", ".wav", ".mp3", ".flac", ".m4a")
@@ -100,36 +100,27 @@ def link_alt(document_type: str) -> Column:
     return _DISPATCH[document_type][1]()
 
 
-@pandas_udf(StringType())
-def urljoin_udf(base: pd.Series, url: pd.Series) -> pd.Series:
-    """P10 — RFC-3986 resolution, byte-identical to Python's urljoin
-    (main.py:104-110: ValueError -> passthrough). Arrow-vectorized."""
+def _make_url_kernels():
+    """Kernels built in a factory, so cloudpickle ships them BY VALUE (their
+    qualnames are not importable): executors need not have this package."""
     from urllib.parse import urljoin
 
-    def join(b, u):
-        if u is None:
-            return u
-        if u.startswith("http://") or u.startswith("https://"):
-            return u
+    http = ("http://", "https://")
+
+    def join_url(base: str | None, url: str | None) -> str | None:
+        """P10 kernel — Python's urljoin, byte for byte (main.py:104-110);
+        absolute http(s) URLs and None pass through, a ValueError keeps url."""
+        if url is None or url.startswith(http):
+            return url
         try:
-            return urljoin(b or "", u)
+            return urljoin(base or "", url)
         except ValueError:
-            return u
+            return url
 
-    return pd.Series([join(b, u) for b, u in zip(base, url)])
-
-
-@pandas_udf(StringType())
-def resolve_base_udf(page_url: pd.Series, base_raw: pd.Series) -> pd.Series:
-    """Base-URL computation (main.py:157-164): base = urljoin(page_url,
-    Head.Base), but a malformed <base href> (ValueError) keeps the PAGE
-    url as base — the reference's `except ValueError: pass` — not the
-    raw Base string. No absolute-scheme shortcut here: the reference
-    calls urljoin directly for base resolution, so e.g. an invalid
-    'http://[' base raises and falls back to the page url."""
-    from urllib.parse import urljoin
-
-    def resolve(page, base):
+    def resolve_base(page: str | None, base: str | None) -> str | None:
+        """Base-URL kernel (main.py:157-164): urljoin(page_url, Head.Base)
+        with no absolute-scheme shortcut; a malformed <base href> such as
+        'http://[' keeps the PAGE url (`except ValueError: pass`), not Base."""
         if base is None:
             return page
         try:
@@ -137,30 +128,48 @@ def resolve_base_udf(page_url: pd.Series, base_raw: pd.Series) -> pd.Series:
         except ValueError:
             return page
 
-    return pd.Series([resolve(p, b) for p, b in zip(page_url, base_raw)])
+    def absolute_http_url(page: str | None, base: str | None, url: str | None) -> list[str]:
+        """P10 + P11 fused (main.py:157-172): ``[absolute url]``, or ``[]``
+        when it is not http(s). Only relative URLs need the base resolved."""
+        if url is not None and not url.startswith(http):
+            url = join_url(resolve_base(page, base), url)
+        return [url] if url is not None and url.startswith(http) else []
+
+    return join_url, resolve_base, absolute_http_url
+
+
+join_url, resolve_base, absolute_http_url = _make_url_kernels()
+
+
+@pandas_udf(StringType())
+def urljoin_udf(base: pd.Series, url: pd.Series) -> pd.Series:
+    """:func:`join_url` over Arrow batches."""
+    return pd.Series([join_url(b, u) for b, u in zip(base, url)])
+
+
+@pandas_udf(StringType())
+def resolve_base_udf(page_url: pd.Series, base_raw: pd.Series) -> pd.Series:
+    """:func:`resolve_base` over Arrow batches."""
+    return pd.Series([resolve_base(p, b) for p, b in zip(page_url, base_raw)])
+
+
+@pandas_udf(ArrayType(StringType()))
+def absolute_http_urls(
+    page_url: pd.Series, base_raw: pd.Series, url: pd.Series
+) -> pd.Series:
+    """:func:`absolute_http_url` over Arrow batches, for ``explode``: a
+    ``where()`` on a string result would be pushed below the projection
+    with the UDF inlined into it, so the UDF would run twice."""
+    return pd.Series(
+        [absolute_http_url(p, b, u) for p, b, u in zip(page_url, base_raw, url)]
+    )
 
 
 def absolutize_urls(df: DataFrame, url: str = "url", base: str = "base_url") -> DataFrame:
-    """Resolve relative URLs against a base column.
-
-    Split/union plan: rows already absolute pass through untouched
-    (pure JVM filter); only relative rows cross the Python boundary.
-    Narrow transformations only — no shuffle is introduced.
-    """
-    # coalesce(false): a NULL url makes BOTH startswith branches NULL,
-    # and two complementary where()s would each drop the row — the row
-    # must instead take the relative branch, whose urljoin_udf handles
-    # None explicitly (passthrough), matching the reference's behavior
-    is_abs = F.coalesce(
-        F.col(url).startswith("http://")
-        | F.col(url).startswith("https://"),
-        F.lit(False),
-    )
-    absolute = df.where(is_abs)
-    relative = df.where(~is_abs).withColumn(
-        url, urljoin_udf(F.col(base), F.col(url))
-    )
-    return absolute.unionByName(relative)
+    """Resolve relative URLs in column ``url`` against column ``base``: one
+    narrow projection that keeps every row (:func:`urljoin_udf` passes
+    absolute URLs and NULLs through)."""
+    return df.withColumn(url, urljoin_udf(F.col(base), F.col(url)))
 
 
 def uid_column(alt: str = "alt", url: str = "url") -> Column:

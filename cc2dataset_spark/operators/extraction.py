@@ -7,8 +7,8 @@ cc_filename, page_url] — semantically identical to
 extract_documents_from_wat (/root/reference/cc2dataset/main.py:134-183),
 but expressed as explode + Column predicates + md5, so Catalyst applies
 nested-schema pruning (only the navigated JSON paths are read from
-parquet), predicate pushdown, and whole-stage codegen. Python runs only
-for relative-URL resolution (minority of rows, Arrow-batched).
+parquet), predicate pushdown, and whole-stage codegen. Python runs once
+per kept link: one Arrow-batched UDF for base, urljoin and scheme filter.
 """
 
 from __future__ import annotations
@@ -17,10 +17,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cc2dataset_spark.functions.links import (
-    absolutize_urls,
+    absolute_http_urls,
     link_alt,
     link_predicate,
-    resolve_base_udf,
     uid_column,
 )
 
@@ -45,40 +44,30 @@ def _guarded(wat_df: DataFrame) -> DataFrame:
 def extract_document_links(wat_df: DataFrame, document_type: str) -> DataFrame:
     """WAT records -> deduplicable (uid, url, alt, cc_filename, page_url).
 
-    Plan stages (all narrow — zero shuffles):
+    Plan stages (all narrow — zero shuffles, one source scan):
       1. envelope guards (P9)
-      2. base-URL resolution (main.py:157-164): one Arrow pass over
-         records (records are 10-100x fewer than links); malformed
-         Base values fall back to the page url, like the reference
-      3. explode(Links) — the 1->N expansion (main.py:166)
-      4. per-type predicate + projection (P1-P8)
-      5. absolutization + scheme filter (P10/P11, main.py:167-172);
-         only relative URLs cross the Python boundary (split/union)
-      6. uid + provenance (P12/P13, main.py:173-176)
+      2. explode(Links) — the 1->N expansion (main.py:166)
+      3. per-type predicate + projection (P1-P8)
+      4. base URL, absolutization, scheme filter (P10/P11,
+         main.py:157-172): one Arrow UDF returning [url] or [], exploded;
+         a malformed Base falls back to the page url, like the reference
+      5. uid + provenance (P12/P13, main.py:173-176)
     """
-    # no when() gate around the UDF: resolve(page, None) already
-    # returns page, and ArrowEvalPython extracts the UDF out of the
-    # CaseWhen so every record crosses the Python boundary regardless
-    # — the conditional bought neither semantics nor a skipped pass
-    based = _guarded(wat_df).withColumn(
-        "base_url", resolve_base_udf(F.col("page_url"), F.col("base_raw"))
-    ).drop("base_raw")
-
-    exploded = based.select(
-        F.explode("links").alias("link"), "base_url", "page_url", "cc_filename"
+    # no when() or split/union gate around the UDF: Spark evaluates a
+    # UDF under when() for every row anyway, and a union scans twice
+    exploded = _guarded(wat_df).select(
+        F.explode("links").alias("link"), "base_raw", "page_url", "cc_filename"
     )
-    filtered = exploded.where(link_predicate(document_type)).select(
-        F.coalesce(F.col("link.url"), F.lit("")).alias("url"),
+    url = absolute_http_urls(
+        F.col("page_url"), F.col("base_raw"), F.coalesce(F.col("link.url"), F.lit(""))
+    )
+    absolute = exploded.where(link_predicate(document_type)).select(
+        F.explode(url).alias("url"),
         link_alt(document_type).alias("alt"),
-        "base_url",
-        "page_url",
         "cc_filename",
+        "page_url",
     )
-    absolute = absolutize_urls(filtered, url="url", base="base_url")
-    scheme_ok = absolute.where(
-        F.col("url").startswith("http://") | F.col("url").startswith("https://")
-    )
-    return scheme_ok.select(
+    return absolute.select(
         uid_column("alt", "url").alias("uid"),
         "url",
         "alt",

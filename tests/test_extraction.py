@@ -2,10 +2,24 @@
 plan must reproduce the pure-Python oracle's 5-tuples exactly (uids are
 md5 of resolved urls, so urljoin parity is covered byte-for-byte)."""
 
+import json
+import os
+import re
+import subprocess
+import sys
+
+import pandas as pd
 import pytest
 
+from cc2dataset_spark.functions.links import (
+    absolute_http_url,
+    absolute_http_urls,
+    resolve_base_udf,
+    urljoin_udf,
+)
 from cc2dataset_spark.operators.extraction import extract_document_links
-from cc2dataset_spark.sources.wat import WAT_SCHEMA, read_wat_jsonl
+from cc2dataset_spark.sources.wat import WAT_SCHEMA, read_wat_archives, read_wat_jsonl
+from tests.fixtures.build_tiny_wat import FIXTURE_PATH
 from tests.wat_fixtures import FIXTURE_RECORDS, oracle_extract
 
 DOCUMENT_TYPES = ("image", "image_only", "audio", "text", "video")
@@ -30,18 +44,116 @@ def test_unknown_document_type_raises(spark, wat_df):
         extract_document_links(wat_df, "bogus")
 
 
+def _write_jsonl(path, records):
+    with open(path, "w", encoding="utf8") as f:
+        for rec in records:
+            f.write(json.dumps(rec) + "\n")
+
+
 def test_jsonl_roundtrip(spark, tmp_path, wat_df):
     """JSON-lines source with schema-on-read gives the same extraction."""
-    import json
-
     p = tmp_path / "wat.jsonl"
-    with open(p, "w", encoding="utf8") as f:
-        for rec in FIXTURE_RECORDS:
-            f.write(json.dumps(rec) + "\n")
+    _write_jsonl(p, FIXTURE_RECORDS)
     df = read_wat_jsonl(spark, str(p))
     got = sorted(tuple(r) for r in extract_document_links(df, "image").collect())
     want = sorted(oracle_extract(FIXTURE_RECORDS, "image"))
     assert got == want
+
+
+# Plan-node patterns: Spark's source scans print as "Scan ExistingRDD"
+# (the archive reader), "FileScan json" and "BatchScan"; the Python
+# boundary prints as ArrowEvalPython or BatchEvalPython.
+_SCAN = re.compile(r"\b(File|Batch)?Scan\b")
+_PY_EVAL = re.compile(r"(Arrow|Batch)EvalPython")
+
+
+@pytest.mark.parametrize("source", ["archives", "jsonl"])
+def test_extraction_plan_scans_once_and_crosses_python_once(spark, tmp_path, source):
+    """Each WAT is decoded once and each link crosses into Python once:
+    the executed plan has one source scan and one Python evaluation."""
+    if source == "archives":
+        wat = read_wat_archives(spark, [FIXTURE_PATH])
+    else:
+        p = tmp_path / "wat.jsonl"
+        _write_jsonl(p, FIXTURE_RECORDS)
+        wat = read_wat_jsonl(spark, str(p))
+    df = extract_document_links(wat, "image")
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    assert sum(1 for l in lines if _SCAN.search(l)) == 1
+    assert sum(1 for l in lines if _PY_EVAL.search(l)) == 1
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == sorted(oracle_extract(FIXTURE_RECORDS, "image"))
+
+
+# (page_url, base_raw, url) -> the absolute http(s) URL kept, or [].
+_FUSED_CASES = [
+    ("http://e.com/a/b.html", None, None, []),
+    ("http://e.com/a/b.html", None, "http://x.io/p.png", ["http://x.io/p.png"]),
+    ("http://e.com/a/b.html", "http://[", "https://x.io/p.png", ["https://x.io/p.png"]),
+    ("http://e.com/a/b.html", None, "mailto:me@e.com", []),
+    ("http://e.com/a/b.html", None, "javascript:void(0)", []),
+    ("http://e.com/a/b.html", None, "img.png", ["http://e.com/a/img.png"]),
+    # malformed <base href>: the page url is the base, not the raw Base
+    ("http://e.com/a/b.html", "http://[", "img.png", ["http://e.com/a/img.png"]),
+    ("http://e.com/a/b.html", "/static/", "img.png", ["http://e.com/static/img.png"]),
+    ("https://e.com/a/b.html", None, "//cdn.io/x.png", ["https://cdn.io/x.png"]),
+    ("http://e.com/a/b/c.html", None, "../d.png", ["http://e.com/a/d.png"]),
+    ("http://e.com/a/b/c.html", "http://b.org/x/y/", "../../z.png", ["http://b.org/z.png"]),
+    ("http://e.com/a/b.html", None, "", ["http://e.com/a/b.html"]),
+    # urljoin raises on the url itself: it stays relative and is dropped
+    ("http://e.com/a/b.html", None, "//[", []),
+]
+
+
+def test_absolute_http_url_kernel_cases():
+    for page, base, url, want in _FUSED_CASES:
+        assert absolute_http_url(page, base, url) == want, (page, base, url)
+
+
+def test_absolute_http_urls_udf_matches_kernel(spark):
+    """The Spark-wrapped UDF returns what its pandas function returns
+    on the same columns, which is the kernel's output row by row."""
+    pdf = pd.DataFrame(
+        [c[:3] for c in _FUSED_CASES], columns=["page", "base", "url"]
+    )
+    want = [list(v) for v in absolute_http_urls.func(pdf.page, pdf.base, pdf.url)]
+    assert want == [c[3] for c in _FUSED_CASES]
+    df = spark.createDataFrame(pdf, "page string, base string, url string").coalesce(1)
+    got = [
+        list(r.out)
+        for r in df.select(
+            absolute_http_urls("page", "base", "url").alias("out")
+        ).collect()
+    ]
+    assert got == want
+
+
+def test_url_udfs_run_where_the_package_is_not_importable(tmp_path):
+    """A session this package did not build gives its Python workers no
+    path to the package, so the URL UDFs must ship their kernels by
+    value: unpickle them in an interpreter that cannot import it."""
+    from pyspark import cloudpickle
+
+    blob = cloudpickle.dumps(
+        [absolute_http_urls.func, urljoin_udf.func, resolve_base_udf.func]
+    )
+    code = (
+        "import pickle, sys\n"
+        "import pandas as pd\n"
+        "fused, join, base = pickle.loads(sys.stdin.buffer.read())\n"
+        "page, url = pd.Series(['http://e.com/a/b.html']), pd.Series(['c.png'])\n"
+        "none = pd.Series([None], dtype=object)\n"
+        "print(fused(page, none, url)[0], join(page, url)[0], base(page, none)[0])\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        input=blob, capture_output=True, cwd=tmp_path, env=env, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr.decode()
+    assert out.stdout.decode().split() == [
+        "['http://e.com/a/c.png']", "http://e.com/a/c.png", "http://e.com/a/b.html"
+    ]
 
 
 def test_dedup_collapses_duplicate_uid(spark, wat_df):
@@ -54,8 +166,6 @@ def test_dedup_collapses_duplicate_uid(spark, wat_df):
 def test_malformed_json_rows_are_skipped(spark, tmp_path):
     """Malformed JSON lines null out under schema-on-read and fall to
     the envelope guards — the skip-and-log tier at main.py:139-143."""
-    import json
-
     p = tmp_path / "bad.jsonl"
     with open(p, "w", encoding="utf8") as f:
         f.write(json.dumps(FIXTURE_RECORDS[0]) + "\n")

@@ -13,7 +13,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from cc2dataset_spark.functions.links import urljoin_udf
+from cc2dataset_spark.functions.links import absolute_http_urls, urljoin_udf
 from cc2dataset_spark.operators.asof import asof_join_union
 from cc2dataset_spark.operators.dedup import dedup_exact
 
@@ -34,6 +34,18 @@ URLS = st.one_of(
     URL_CHARS.map(lambda s: "http://abs.io/" + s),
     URL_CHARS.map(lambda s: "mailto:" + s),
     st.just(""),
+)
+PAGES = st.one_of(
+    st.just("http://example.com/a/b/c.html"),
+    st.just("https://h.io/x/"),
+    URL_CHARS.map(lambda s: "https://p.org/" + s),
+)
+BASE_RAWS = st.one_of(
+    st.none(),
+    st.just("http://["),
+    URL_CHARS,
+    URL_CHARS.map(lambda s: "/" + s),
+    URL_CHARS.map(lambda s: "https://b.net/" + s),
 )
 
 
@@ -61,6 +73,35 @@ def test_urljoin_udf_matches_python(spark, pairs):
         ).collect()
     ]
     want = [_py_reference(b, u) for b, u in pairs]
+    assert got == want
+
+
+def _py_fused_reference(page: str, base_raw, url: str) -> list:
+    """urljoin(resolve(page, base), url), then the http(s) filter."""
+    base = page
+    if base_raw is not None:
+        try:
+            base = urljoin(page, base_raw)
+        except ValueError:
+            pass
+    url = _py_reference(base, url)
+    return [url] if url.startswith(("http://", "https://")) else []
+
+
+@settings(max_examples=5, deadline=None)
+@given(st.lists(st.tuples(PAGES, BASE_RAWS, URLS), min_size=1, max_size=60))
+def test_absolute_http_urls_matches_python(spark, triples):
+    df = spark.createDataFrame(
+        pd.DataFrame(triples, columns=["page", "base_raw", "url"]),
+        "page string, base_raw string, url string",
+    ).coalesce(1)
+    got = [
+        list(r.out)
+        for r in df.select(
+            absolute_http_urls("page", "base_raw", "url").alias("out")
+        ).collect()
+    ]
+    want = [_py_fused_reference(p, b, u) for p, b, u in triples]
     assert got == want
 
 
