@@ -36,9 +36,9 @@ def _build_parser() -> argparse.ArgumentParser:
     pipe.add_argument(
         "--source",
         default="warc",
-        choices=["warc", "jsonl", "wat-warc", "wat-jsonl"],
-        help="ingestion path: fastwarc reader (warc), schema-on-read "
-        "jsonl twin, or the registered wat Data Source in either mode",
+        choices=["warc", "jsonl"],
+        help="ingestion path: WARC archive reader (warc) or the "
+        "schema-on-read jsonl twin",
     )
 
     q = sub.add_parser("query", help="run one catalog query and show it")
@@ -157,20 +157,6 @@ def main(argv: list[str] | None = None) -> int:
             from cc2dataset_spark.sources.wat import read_wat_jsonl
 
             source = read_wat_jsonl
-        elif args.source.startswith("wat-"):
-            from cc2dataset_spark.sources.wat_datasource import WatDataSource
-
-            spark.dataSource.register(WatDataSource)
-            mode = args.source.removeprefix("wat-")
-
-            def source(s, paths, _mode=mode):
-                return (
-                    s.read.format("wat")
-                    .option("paths", ",".join(paths))
-                    .option("mode", _mode)
-                    .load()
-                )
-
         n = cc2dataset(
             spark,
             args.output_path,

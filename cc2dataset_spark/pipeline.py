@@ -175,9 +175,8 @@ def process_part(
     """X1 — one part: archives -> extraction -> dedup -> write.
 
     ``source`` ((spark, paths) -> DataFrame[WAT_SCHEMA], default the
-    fastwarc archive reader) selects the ingestion path: jsonl twins
-    for hermetic runs, or the registered ``wat`` Python Data Source
-    (sources/wat_datasource.py) for planner-visible partitioning."""
+    WARC archive reader ``read_wat_archives``) selects the ingestion
+    path; ``read_wat_jsonl`` is the hermetic twin."""
     read = source if source is not None else read_wat_archives
     wat_df = read(spark, wat_paths)
     extracted = extract_document_links(wat_df, document_type)

@@ -1,20 +1,18 @@
 """WAT/WARC sources (SURVEY.md §2.1 S1-S10).
 
-Three ingestion paths, most- to least-declarative:
+Two ingestion paths:
 
-1. ``read_wat_structs`` — WAT records already materialized as structs
-   (parquet/JSON with WAT_SCHEMA). Fully declarative; used by the
-   hermetic tests and any pre-parsed lake.
-2. ``read_wat_jsonl`` — JSON-lines of WAT envelopes via
-   ``spark.read.schema(WAT_SCHEMA).json`` (schema-on-read, no inference;
-   malformed rows -> nulls, dropped by the envelope guards, mirroring
-   the reference's skip-and-log at main.py:139-143).
-3. ``read_wat_archives`` — real gzipped WARC archives. Binary WARC
-   decoding has no Spark primitive, so this is the one mapPartitions
-   source (one Spark partition per WAT path, exactly like the
-   reference's ``sc.parallelize(paths, len(paths))`` at main.py:274),
-   emitting rows with an EXPLICIT schema (no sampling inference).
-   Needs fastwarc; import is gated so the engine works without it.
+1. ``read_wat_archives`` — real gzipped WARC archives, the default.
+   Binary WARC decoding has no Spark primitive, so this is the one
+   Python-decoded source (one Spark partition per WAT path, exactly
+   like the reference's ``sc.parallelize(paths, len(paths))`` at
+   main.py:274), emitting rows with an EXPLICIT schema (no sampling
+   inference). The per-archive function ships by value, so executors
+   need only pyspark; fastwarc and fsspec are used when installed.
+2. ``read_wat_jsonl`` — the hermetic twin: JSON-lines of WAT envelopes
+   via ``spark.read.schema(WAT_SCHEMA).json`` (schema-on-read, no
+   inference; malformed rows -> nulls, dropped by the envelope guards,
+   mirroring the reference's skip-and-log at main.py:139-143).
 
 Index discovery (S1-S5) lists crawl indexes and samples WAT paths;
 network listing is driver-side (it is a metadata operation), the
@@ -112,12 +110,6 @@ EXTRACT_SCHEMA = StructType(
         StructField("page_url", StringType()),
     ]
 )
-
-
-def read_wat_structs(spark: SparkSession, path: str) -> DataFrame:
-    """Pre-parsed WAT records from parquet (nested-schema pruning keeps
-    the scan to just the navigated paths)."""
-    return spark.read.schema(WAT_SCHEMA).parquet(path)
 
 
 def read_wat_jsonl(spark: SparkSession, path: str) -> DataFrame:
@@ -327,27 +319,51 @@ def read_wat_index(
 # ---------------------------------------------------------------------------
 
 
-def read_wat_archives(
-    spark: SparkSession, wat_paths: list[str], retries: int = 10
-) -> DataFrame:
-    """WAT archives -> DataFrame[WAT_SCHEMA].
+def make_wat_record_iterator():
+    """Build the per-archive function of :func:`read_wat_archives`:
+    WAT path -> WAT_SCHEMA-shaped row tuples.
 
-    One Spark partition per WAT path so a 100 TB crawl parallelizes to
-    one task per ~1 GB archive with no skew (reference main.py:273-274).
-    Everything downstream (explode, predicates, dedup) is declarative.
+    Built in a factory like ``warc_fallback.make_warc_record_iterator``:
+    cloudpickle ships a function whose qualname is not importable BY
+    VALUE, together with the navigator and the WARC parser it closes
+    over, so executors need nothing beyond pyspark.
 
-    The per-path iterator mirrors the reference's 3-tier error
-    containment (main.py:141-143, 178-183, 190-200): record-level skip,
-    file-level skip, retried IO. It is a self-contained closure —
-    pickled by value (including the dependency-free WARC parser, see
-    sources/warc_fallback.py), so executors need NOTHING beyond
-    pyspark on their PYTHONPATH: fastwarc (fast C parser) and fsspec
-    (remote IO) are used when present, with pure-stdlib fallbacks
-    (gzip-member WARC reader, local open) otherwise.
-    """
+    The function mirrors the reference's 3-tier error containment
+    (main.py:141-143, 178-183, 190-200): record-level skip, file-level
+    skip, and a whole-file read retried 10 times with jitter."""
     from cc2dataset_spark.sources.warc_fallback import iter_warc_records
 
-    def iter_wat_links(path: str) -> Iterator[dict]:
+    def navigate(data: dict) -> tuple | None:
+        """WAT envelope dict -> WAT_SCHEMA-shaped nested tuple, or None
+        when an envelope guard fails (main.py:146-153 ``in`` checks —
+        RECORD skip). Any OTHER structural error (missing Envelope /
+        Container.Filename / WARC-Target-URI, a non-dict link) RAISES
+        into the file tier."""
+        envelope = data["Envelope"]
+        payload = envelope["Payload-Metadata"]
+        if "HTTP-Response-Metadata" not in payload:
+            return None
+        html = payload["HTTP-Response-Metadata"]
+        if "HTML-Metadata" not in html:
+            return None
+        meta = html["HTML-Metadata"]
+        # explicit None check: a present-but-null Links key must fail
+        # the guard (not TypeError into the whole-file skip)
+        if meta.get("Links") is None:
+            return None
+        links = [
+            (l.get("url"), l.get("alt"), l.get("text"), l.get("path"))
+            for l in meta["Links"]
+        ]
+        # (meta.get("Head") or {}): a present-but-null Head would make
+        # the .get default useless, and the AttributeError would drop
+        # the whole archive — the same null trap as Links above
+        base = (meta.get("Head") or {}).get("Base")
+        page_url = envelope["WARC-Header-Metadata"]["WARC-Target-URI"]
+        filename = data["Container"]["Filename"]
+        return (((((links, (base,)),),), (page_url,)), (filename,))
+
+    def iter_wat_records(path: str) -> Iterator[tuple]:
         import random as _random
         import time as _time
         from io import BytesIO
@@ -363,13 +379,13 @@ def read_wat_archives(
 
                 return fsspec.open(p, "rb").open()
             except ImportError:
-                # same contract as wat_datasource._open_binary: a
-                # remote scheme without fsspec is a CONFIGURATION
-                # error and must fail loudly — builtin open would
-                # raise FileNotFoundError, which the retry tier below
-                # treats as flaky IO (10 retries, ~14 s of sleeps)
-                # and then silently skips the file, making a missing
-                # dependency indistinguishable from an empty crawl
+                # a remote scheme without fsspec (or its filesystem
+                # plugin) is a CONFIGURATION error and must fail loudly
+                # — builtin open would raise FileNotFoundError, which
+                # the retry tier below treats as flaky IO (10 retries,
+                # ~14 s of sleeps) and then silently skips the file,
+                # making a missing dependency indistinguishable from an
+                # empty crawl
                 if "://" in p and not p.startswith("file://"):
                     raise NotImplementedError(
                         f"reading {p!r} requires fsspec for remote "
@@ -393,16 +409,18 @@ def read_wat_archives(
             ):
                 yield record.reader
 
-        stream = None
-        for i in range(retries):
+        attempts = 10  # the reference's retry budget (main.py:190-200)
+        for i in range(attempts):
             try:
+                # open INSIDE the retry: remote stores fail at open()
+                # as often as at read()
                 with _open(path) as f:
                     stream = BytesIO(f.read())
                 break
             except NotImplementedError:
                 raise  # missing fsspec: deterministic, never retried
             except Exception:  # noqa: BLE001 - flaky remote IO
-                if i == retries - 1:
+                if i == attempts - 1:
                     return
                 _time.sleep(1 + _random.random())
         # Rows BUFFER per file, yielded only after the whole archive
@@ -412,67 +430,34 @@ def read_wat_archives(
         # EARLIER records of that file — an incremental yield would
         # leak them. The buffer is bounded by one archive's extracted
         # links, exactly the reference's ``all_links`` list.
-        rows: list[dict] = []
+        rows: list[tuple] = []
         try:
             for reader in _payload_readers(stream):
                 try:
                     data = _json.load(reader)
                 except Exception:  # noqa: BLE001 - malformed record: skip
                     continue
-                envelope = data["Envelope"]
-                payload = envelope["Payload-Metadata"]
-                if "HTTP-Response-Metadata" not in payload:
-                    continue
-                html = payload["HTTP-Response-Metadata"]
-                if "HTML-Metadata" not in html:
-                    continue
-                meta = html["HTML-Metadata"]
-                # explicit None check: a present-but-null Links key must
-                # fail the guard (not TypeError into the whole-file skip)
-                if meta.get("Links") is None:
-                    continue
-                rows.append({
-                    "Envelope": {
-                        "Payload-Metadata": {
-                            "HTTP-Response-Metadata": {
-                                "HTML-Metadata": {
-                                    "Links": [
-                                        {
-                                            "url": l.get("url"),
-                                            "alt": l.get("alt"),
-                                            "text": l.get("text"),
-                                            "path": l.get("path"),
-                                        }
-                                        for l in meta["Links"]
-                                    ],
-                                    # (meta.get("Head") or {}): Head
-                                    # PRESENT-BUT-NULL would make
-                                    # .get default useless and the
-                                    # AttributeError would hit the
-                                    # whole-file except below,
-                                    # discarding the entire archive —
-                                    # the same null trap the Links
-                                    # guard above documents
-                                    "Head": {
-                                        "Base": (
-                                            meta.get("Head") or {}
-                                        ).get("Base")
-                                    },
-                                }
-                            }
-                        },
-                        "WARC-Header-Metadata": {
-                            "WARC-Target-URI": envelope["WARC-Header-Metadata"][
-                                "WARC-Target-URI"
-                            ]
-                        },
-                    },
-                    "Container": {"Filename": data["Container"]["Filename"]},
-                })
+                row = navigate(data)
+                if row is not None:
+                    rows.append(row)
         except Exception:  # noqa: BLE001 - whole-file parse failure: drop ALL
             return
         yield from rows
 
+    return iter_wat_records
+
+
+iter_wat_records = make_wat_record_iterator()
+
+
+def read_wat_archives(spark: SparkSession, wat_paths: list[str]) -> DataFrame:
+    """WAT archives -> DataFrame[WAT_SCHEMA].
+
+    One Spark partition per WAT path so a 100 TB crawl parallelizes to
+    one task per ~1 GB archive with no skew (reference main.py:273-274).
+    Each task runs :func:`iter_wat_records` on its path; everything
+    downstream (explode, predicates, dedup) is declarative.
+    """
     sc = spark.sparkContext
-    rdd = sc.parallelize(wat_paths, max(1, len(wat_paths))).flatMap(iter_wat_links)
+    rdd = sc.parallelize(wat_paths, max(1, len(wat_paths))).flatMap(iter_wat_records)
     return spark.createDataFrame(rdd, WAT_SCHEMA)

@@ -18,14 +18,29 @@ from __future__ import annotations
 
 import io
 import os
+import subprocess
+import sys
+import time
+import types
 
 import pytest
 
 from cc2dataset_spark.operators.extraction import extract_document_links
-from cc2dataset_spark.sources.wat import read_wat_archives
+from cc2dataset_spark.sources.wat import iter_wat_records, read_wat_archives
 from cc2dataset_spark.sources.warc_fallback import iter_warc_records
 from tests.fixtures.build_tiny_wat import FIXTURE_PATH, build_warc_bytes, build
 from tests.wat_fixtures import FIXTURE_RECORDS, oracle_extract
+
+# The fixture records that pass the envelope guards: the archive
+# reader drops the null-Links record before emitting rows.
+_GUARDED = [
+    r
+    for r in FIXTURE_RECORDS
+    if r["Envelope"]["Payload-Metadata"]["HTTP-Response-Metadata"][
+        "HTML-Metadata"
+    ]["Links"]
+    is not None
+]
 
 
 def test_fixture_is_deterministic_and_checked_in():
@@ -67,16 +82,8 @@ def test_read_wat_archives_golden_records(spark):
     the warcinfo record is filtered by record type, the malformed-JSON
     record is skipped at record level, and the null-Links record fails
     the envelope guard inside the iterator."""
-    guarded = [
-        r
-        for r in FIXTURE_RECORDS
-        if r["Envelope"]["Payload-Metadata"]["HTTP-Response-Metadata"][
-            "HTML-Metadata"
-        ]["Links"]
-        is not None
-    ]
     df = read_wat_archives(spark, [FIXTURE_PATH])
-    assert df.count() == len(guarded)
+    assert df.count() == len(_GUARDED)
 
 
 @pytest.mark.parametrize(
@@ -146,6 +153,92 @@ def test_file_tier_drops_already_extracted_records(spark, tmp_path):
     assert read_wat_archives(spark, [fb]).count() == 2
     # both files in one scan: only file B's records survive
     assert read_wat_archives(spark, [fa, fb]).count() == 2
+
+
+def test_wat_source_one_partition_per_archive(spark, tmp_path):
+    """The archive scan plans one partition per input archive, so a
+    failing file drops only its own partition's rows."""
+    import json
+
+    good = json.dumps(FIXTURE_RECORDS[0], separators=(",", ":")).encode()
+    paths = [
+        _gz_warc(tmp_path / f"{name}.warc.gz", [good] * n)
+        for name, n in (("a", 1), ("b", 2), ("c", 3))
+    ]
+    df = read_wat_archives(spark, paths)
+    assert df.rdd.getNumPartitions() == len(paths)
+    assert df.rdd.glom().map(len).collect() == [1, 2, 3]
+
+
+def _fsspec_failing_first(n: int, monkeypatch) -> list[str]:
+    """Install an fsspec stand-in whose first ``n`` opens raise; return
+    the list of paths it was asked to open."""
+    calls: list[str] = []
+
+    def flaky_open(path, mode):
+        calls.append(path)
+        if len(calls) <= n:
+            raise OSError("transient remote failure")
+        return types.SimpleNamespace(open=lambda: open(path, mode))
+
+    monkeypatch.setitem(
+        sys.modules, "fsspec", types.SimpleNamespace(open=flaky_open)
+    )
+    return calls
+
+
+def test_warc_iter_retries_flaky_io(monkeypatch):
+    """X6: the whole-file open is retried with backoff and then
+    succeeds; when all 10 attempts fail the file is skipped (no rows,
+    no raise) — the reference's file-tier containment
+    (main.py:190-200)."""
+    sleeps: list[float] = []
+    monkeypatch.setattr(time, "sleep", sleeps.append)
+    calls = _fsspec_failing_first(2, monkeypatch)
+    assert len(list(iter_wat_records(FIXTURE_PATH))) == len(_GUARDED)
+    assert len(calls) == 3 and len(sleeps) == 2  # two failures + one success
+
+    calls = _fsspec_failing_first(10, monkeypatch)
+    assert list(iter_wat_records(FIXTURE_PATH)) == []
+    assert len(calls) == 10  # exhausted, skipped silently
+
+
+def test_remote_path_without_fsspec_fails_loudly(monkeypatch):
+    """A remote scheme with no fsspec installed is a configuration
+    error: it raises on the first attempt instead of being retried as
+    flaky IO and then silently skipped like an unreadable archive."""
+    sleeps: list[float] = []
+    monkeypatch.setattr(time, "sleep", sleeps.append)
+    monkeypatch.setitem(sys.modules, "fsspec", None)
+    with pytest.raises(NotImplementedError, match="requires fsspec"):
+        list(iter_wat_records("s3://commoncrawl/a.warc.wat.gz"))
+    assert sleeps == []
+
+
+def test_archive_reader_runs_where_the_package_is_not_importable(tmp_path):
+    """Executors need only pyspark: the per-archive function ships by
+    value, so an interpreter that cannot import this package unpickles
+    it and reads the fixture archive."""
+    from pyspark import cloudpickle
+
+    code = (
+        "import pickle, sys\n"
+        "try:\n"
+        "    import cc2dataset_spark\n"
+        "    sys.exit('the package is importable')\n"
+        "except ImportError:\n"
+        "    pass\n"
+        "fn = pickle.loads(sys.stdin.buffer.read())\n"
+        "print(sum(1 for _ in fn(sys.argv[1])))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code, FIXTURE_PATH],
+        input=cloudpickle.dumps(iter_wat_records),
+        capture_output=True, cwd=tmp_path, env=env, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr.decode()
+    assert int(out.stdout) == len(_GUARDED)
 
 
 def test_http_scrape_discovery_rewrite_offline():
