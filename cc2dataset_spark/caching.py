@@ -3,7 +3,10 @@
 Several operators persist() an intermediate whose lifetime must extend
 past their own return — range-partitioned global ranks pin their
 boundary sample (operators/rank.py), MinHash pins the shared shingle
-set, quality tiers pin the per-doc score frame. The r5/r6 protocol
+set, quality tiers pin the per-doc score frame, and
+``multimodal_phash_neardup`` (plans/multimodal_ops.py) pins its
+(doc_id, phash) proxy so the PNG round-trip kernel runs once instead
+of once per plan branch. The r5/r6 protocol
 (stacking handles on a ``_pinned_intermediates`` DataFrame attribute
 and hoping callers invoke ``rank.release``) leaked in every production
 path: the attribute is lost through any further transformation and
@@ -28,7 +31,10 @@ subsequent builds, or its pinned frames may be recomputed — for
 ranked frames the range boundaries would re-sample (operators/rank.py)
 and partition attribution could silently shift. Consumers juggling
 more in-flight queries can raise :data:`RELEASE_DEPTH` (or call
-:func:`set_release_depth`) before building.
+:func:`set_release_depth`) before building. For
+``multimodal_phash_neardup`` a released pin is not a correctness
+risk: its plan silently falls back to recomputing the pHash kernel in
+each of its four branches.
 """
 
 from __future__ import annotations

@@ -365,20 +365,18 @@ _NLL_CTES = rf"""tok AS (
     )"""
 
 
-def _per_doc_nll(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens, mean_nll) — the Spark twin of _NLL_CTES."""
-    tok = docs.select(
-        "doc_id", F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
-    )
-    # COUNT(*) over the exploded stream == SUM(size(tokens)) over the
-    # un-exploded rows (empty/NULL arrays explode to zero rows and
-    # sum as 0/NULL-skipped): same integer, but this pass no longer
-    # materializes the corpus-sized token stream just to count it
-    # (guide §2.3 "shuffle fewer bytes" applied to the Generate:
-    # tokenize once per row, emit one int)
-    # (NULL text guarded explicitly: legacy size(NULL) = -1 would
-    # corrupt the sum, while explode of NULL contributes zero rows)
-    total = docs.agg(
+def _corpus_token_total(docs: DataFrame) -> DataFrame:
+    """1-row (n_total DOUBLE): the corpus token count.
+
+    COUNT(*) over the exploded token stream == SUM(size(tokens)) over
+    the un-exploded rows (empty/NULL arrays explode to zero rows and
+    sum as 0): same integer, but the pass no longer materializes the
+    corpus-sized token stream just to count it (guide §2.3 "shuffle
+    fewer bytes" applied to the Generate: tokenize once per row, emit
+    one int). NULL text is guarded explicitly: legacy size(NULL) = -1
+    would corrupt the sum, while explode of NULL contributes zero
+    rows."""
+    return docs.agg(
         F.sum(
             F.when(
                 F.col("text").isNotNull(),
@@ -388,6 +386,14 @@ def _per_doc_nll(docs: DataFrame) -> DataFrame:
         .cast("double")
         .alias("n_total")
     )
+
+
+def _per_doc_nll(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, mean_nll) — the Spark twin of _NLL_CTES."""
+    tok = docs.select(
+        "doc_id", F.explode(T.tokens(F.lower(F.col("text")))).alias("term")
+    )
+    total = _corpus_token_total(docs)
     uc = F.count("*").over(Window.partitionBy("term"))
     srp = F.round(-F.log(uc.cast("double") / F.col("n_total")), 9)
     return (
@@ -542,22 +548,7 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni = tok.groupBy("term").agg(
         F.count("*").cast("double").alias("c_uni")
     )
-    # n_total == COUNT(*) over the exploded token stream; computed as
-    # SUM(size(tokens)) over the un-exploded rows instead (same
-    # integer — empty/NULL arrays explode to zero rows and sum as 0),
-    # so the third corpus pass stops materializing a Generate just to
-    # count its rows (guide §2.3). NULL text guarded: legacy
-    # size(NULL) = -1 would corrupt the sum.
-    total = docs.agg(
-        F.sum(
-            F.when(
-                F.col("text").isNotNull(),
-                F.size(T.tokens(F.lower(F.col("text")))),
-            ).otherwise(F.lit(0))
-        )
-        .cast("double")
-        .alias("n_total")
-    )
+    total = _corpus_token_total(docs)
     w_big = Window.partitionBy("prev", "cur")
     w_prev = Window.partitionBy("prev")
     scored = (

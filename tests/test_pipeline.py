@@ -3,10 +3,16 @@ resume, and the invariants implied by the reference
 (/root/reference/cc2dataset/main.py:254-329): dedup idempotence and
 multipart-merge == single-part on the same input."""
 
+import importlib.util
 import json
 import os
+import subprocess
+import sys
 
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameReader
 
 from cc2dataset_spark import pipeline
 from cc2dataset_spark.operators.extraction import extract_document_links
@@ -41,6 +47,35 @@ def _jsonl_archive_source(monkeypatch):
 
 def _expected_unique_uids(document_type="image"):
     return {t[0] for t in oracle_extract(FIXTURE_RECORDS, document_type)}
+
+
+def _data_files(path):
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if not f.startswith(("_", "."))
+    )
+
+
+def _column_codecs(path):
+    """Every column chunk's codec over the data files in ``path``."""
+    codecs = set()
+    for f in _data_files(path):
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            codecs |= {rg.column(c).compression for c in range(rg.num_columns)}
+    return codecs
+
+
+@pytest.fixture
+def no_read_back(monkeypatch):
+    """Make any parquet read through the DataFrame API fail."""
+
+    def refuse(self, *paths, **options):
+        raise AssertionError(f"parquet read back from {paths}")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", refuse)
 
 
 def test_pipeline_on_real_warc_archive(spark, tmp_path, monkeypatch):
@@ -167,6 +202,81 @@ def test_shuffle_scatter_is_deterministic(spark, tmp_path, wat_jsonl):
         n, F.xxhash64(F.col("uid"), F.lit(42))
     )._jdf.queryExecution().analyzed().toString()
     assert "rand(" not in plan
+
+
+def test_written_files_are_zstd(spark, tmp_path, wat_jsonl):
+    """process_part and merge_parts both write every column chunk of
+    every data file with zstd."""
+    part = str(tmp_path / "part")
+    merged = str(tmp_path / "merged")
+    n = pipeline.process_part(spark, wat_jsonl, part, "image", min_files=4)
+    m = pipeline.merge_parts(spark, [part], merged, wat_count=2, min_files=4)
+    assert n == m == len(_expected_unique_uids())
+    for path in (part, merged):
+        assert len(_data_files(path)) == 4
+        assert _column_codecs(path) == {"ZSTD"}
+
+
+@pytest.mark.parametrize("shuffle", [True, False])
+def test_write_counts_rows_without_reading_back(
+    spark, tmp_path, wat_jsonl, no_read_back, shuffle
+):
+    """The returned count comes from the write pass itself: no parquet
+    read during the call, and it equals the rows on disk."""
+    extracted = extract_document_links(read_wat_jsonl(spark, wat_jsonl), "image")
+    out = str(tmp_path / "out")
+    n = pipeline.deduplicate_repartition_write(
+        extracted, out, wat_count=2, shuffle=shuffle, min_files=4
+    )
+    on_disk = pq.read_table(_data_files(out)).column("uid").to_pylist()
+    assert n == len(on_disk) == len(_expected_unique_uids("image"))
+    assert set(on_disk) == _expected_unique_uids("image")
+    assert len(_data_files(out)) == 4
+
+
+def test_write_of_empty_input_returns_zero(
+    spark, tmp_path, wat_jsonl, no_read_back
+):
+    extracted = extract_document_links(read_wat_jsonl(spark, wat_jsonl), "image")
+    out = str(tmp_path / "empty")
+    n = pipeline.deduplicate_repartition_write(
+        extracted.where(F.lit(False)), out, wat_count=2, min_files=4
+    )
+    assert n == 0
+    table = pq.read_table(_data_files(out))
+    assert table.num_rows == 0
+    assert table.column_names == extracted.columns
+
+
+def test_parquet_bytes_tool(spark, tmp_path, wat_jsonl):
+    """tools/parquet_bytes.py accounts for every byte of a written
+    dataset: per-column plus non-column bytes add up to the files."""
+    out = str(tmp_path / "out")
+    n = pipeline.process_part(spark, wat_jsonl, out, "image", min_files=4)
+    tool = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools",
+        "parquet_bytes.py",
+    )
+    spec = importlib.util.spec_from_file_location("parquet_bytes", tool)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    s = mod.summarize(out)
+    assert s["rows"] == n and s["files"] == 4
+    assert s["codecs"] == ["ZSTD"]
+    assert list(s["column_bytes"]) == [
+        "uid", "url", "alt", "cc_filename", "page_url"
+    ]
+    assert s["non_column_bytes"] > 0
+    assert sum(s["column_bytes"].values()) + s["non_column_bytes"] == sum(
+        os.path.getsize(f) for f in _data_files(out)
+    )
+    printed = subprocess.run(
+        [sys.executable, tool, out], capture_output=True, text=True, check=True
+    ).stdout
+    assert f"rows        {n}\n" in printed
+    assert "codecs      ZSTD\n" in printed
+    assert "  uid " in printed and "(non-column)" in printed
 
 
 def test_resume_rejects_changed_multipart(spark, tmp_path, wat_jsonl):

@@ -147,16 +147,19 @@ def test_phash_neardup_pins_single_hash_kernel(spark):
     from cc2dataset_spark.plans.catalog import queries
 
     df = queries()["multimodal_phash_neardup"](spark, "/root/testdata/sf0.001")
-    # the pinned proxy frame is registered in the current generation
-    pinned = [
-        f
-        for f in caching._GENERATIONS[-1]
-        if set(f.schema.names) == {"doc_id", "phash"}
-    ]
-    assert pinned and all(f.storageLevel.useMemory for f in pinned)
-    # and every branch of the executed plan reads the cache
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "InMemoryTableScan" in plan
+    try:
+        # the pinned proxy frame is registered in the current generation
+        pinned = [
+            f
+            for f in caching._GENERATIONS[-1]
+            if set(f.schema.names) == {"doc_id", "phash"}
+        ]
+        assert pinned and all(f.storageLevel.useMemory for f in pinned)
+        # and every branch of the executed plan reads the cache
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
+        assert "InMemoryTableScan" in plan
+    finally:
+        caching.release_all()
