@@ -1,4 +1,4 @@
-.PHONY: test test-full bench bench-wat verify plans lint
+.PHONY: test test-full bench bench-wat bench-wat-trace verify plans lint
 
 test:
 	python -m pytest tests/ -q
@@ -14,6 +14,11 @@ bench:
 bench-wat:
 	python3 perfbench/run.py --workload wat_image --seed 1 --seconds 5 --trace 0
 	python3 perfbench/run.py --workload wat_text --seed 1 --seconds 5 --trace 0
+
+# the same runs traced: per-layer metrics and the archive scan stage
+bench-wat-trace:
+	python3 perfbench/run.py --workload wat_image --seed 1 --seconds 5 --trace 1
+	python3 perfbench/run.py --workload wat_text --seed 1 --seconds 5 --trace 1
 
 verify:
 	cd /tmp && python $(CURDIR)/tools/driver_sim.py

@@ -4,11 +4,13 @@ Two ingestion paths:
 
 1. ``read_wat_archives`` — real gzipped WARC archives, the default.
    Binary WARC decoding has no Spark primitive, so this is the one
-   Python-decoded source (one Spark partition per WAT path, exactly
-   like the reference's ``sc.parallelize(paths, len(paths))`` at
-   main.py:274), emitting rows with an EXPLICIT schema (no sampling
-   inference). The per-archive function ships by value, so executors
-   need only pyspark; fastwarc and fsspec are used when installed.
+   Python-decoded source: a ``mapInArrow`` over the paths, one Spark
+   partition per WAT path exactly like the reference's
+   ``sc.parallelize(paths, len(paths))`` at main.py:274, and each task
+   hands Spark Arrow record batches shaped by an EXPLICIT schema (no
+   sampling inference, no pickled rows). The per-archive function ships
+   by value, so executors need only pyspark; fastwarc and fsspec are
+   used when installed.
 2. ``read_wat_jsonl`` — the hermetic twin: JSON-lines of WAT envelopes
    via ``spark.read.schema(WAT_SCHEMA).json`` (schema-on-read, no
    inference; malformed rows -> nulls, dropped by the envelope guards,
@@ -315,55 +317,67 @@ def read_wat_index(
 
 
 # ---------------------------------------------------------------------------
-# Archive source (S6-S10) — the one mapPartitions boundary
+# Archive source (S6-S10) — one mapInArrow task per archive
 # ---------------------------------------------------------------------------
 
+# Records per Arrow batch: bounds the Python column lists of an archive
+# in flight and keeps every string array far below Arrow's 2 GB int32
+# offset limit on full-size WATs.
+BATCH_RECORDS = 1024
 
-def make_wat_record_iterator():
+
+def make_wat_batch_reader():
     """Build the per-archive function of :func:`read_wat_archives`:
-    WAT path -> WAT_SCHEMA-shaped row tuples.
+    WAT path -> ``pyarrow.RecordBatch`` es shaped exactly like
+    WAT_SCHEMA.
 
     Built in a factory like ``warc_fallback.make_warc_record_iterator``:
     cloudpickle ships a function whose qualname is not importable BY
-    VALUE, together with the navigator and the WARC parser it closes
-    over, so executors need nothing beyond pyspark.
+    VALUE, together with the navigation and the WARC parser it closes
+    over, so executors need nothing beyond pyspark (and its pyarrow).
 
     The function mirrors the reference's 3-tier error containment
     (main.py:141-143, 178-183, 190-200): record-level skip, file-level
     skip, and a whole-file read retried 10 times with jitter."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from cc2dataset_spark.sources.warc_fallback import iter_warc_records
 
-    def navigate(data: dict) -> tuple | None:
-        """WAT envelope dict -> WAT_SCHEMA-shaped nested tuple, or None
-        when an envelope guard fails (main.py:146-153 ``in`` checks —
-        RECORD skip). Any OTHER structural error (missing Envelope /
-        Container.Filename / WARC-Target-URI, a non-dict link) RAISES
-        into the file tier."""
-        envelope = data["Envelope"]
-        payload = envelope["Payload-Metadata"]
-        if "HTTP-Response-Metadata" not in payload:
-            return None
-        html = payload["HTTP-Response-Metadata"]
-        if "HTML-Metadata" not in html:
-            return None
-        meta = html["HTML-Metadata"]
-        # explicit None check: a present-but-null Links key must fail
-        # the guard (not TypeError into the whole-file skip)
-        if meta.get("Links") is None:
-            return None
-        links = [
-            (l.get("url"), l.get("alt"), l.get("text"), l.get("path"))
-            for l in meta["Links"]
-        ]
-        # (meta.get("Head") or {}): a present-but-null Head would make
-        # the .get default useless, and the AttributeError would drop
-        # the whole archive — the same null trap as Links above
-        base = (meta.get("Head") or {}).get("Base")
-        page_url = envelope["WARC-Header-Metadata"]["WARC-Target-URI"]
-        filename = data["Container"]["Filename"]
-        return (((((links, (base,)),),), (page_url,)), (filename,))
+    schema = to_arrow_schema(WAT_SCHEMA)
+    envelope_t = schema.field("Envelope").type
+    container_t = schema.field("Container").type
+    payload_t = envelope_t.field("Payload-Metadata").type
+    warc_t = envelope_t.field("WARC-Header-Metadata").type
+    response_t = payload_t.field("HTTP-Response-Metadata").type
+    html_t = response_t.field("HTML-Metadata").type
+    links_t = html_t.field("Links").type
+    head_t = html_t.field("Head").type
 
-    def iter_wat_records(path: str) -> Iterator[tuple]:
+    def struct(t, *children):
+        return pa.StructArray.from_arrays(children, fields=list(t))
+
+    def strings(values: list):
+        return pa.array(values, pa.string())
+
+    def to_batch(url, alt, text, lpath, offsets, base, page, filename):
+        """Pending column lists -> one WAT_SCHEMA record batch."""
+        links = pa.ListArray.from_arrays(
+            pa.array(offsets, pa.int32()),
+            struct(links_t.value_type, *map(strings, (url, alt, text, lpath))),
+            type=links_t,
+        )
+        html = struct(html_t, links, struct(head_t, strings(base)))
+        envelope = struct(
+            envelope_t,
+            struct(payload_t, struct(response_t, html)),
+            struct(warc_t, strings(page)),
+        )
+        return pa.RecordBatch.from_arrays(
+            [envelope, struct(container_t, strings(filename))], schema=schema
+        )
+
+    def iter_wat_batches(path: str) -> Iterator[pa.RecordBatch]:
         import random as _random
         import time as _time
         from io import BytesIO
@@ -423,31 +437,69 @@ def make_wat_record_iterator():
                 if i == attempts - 1:
                     return
                 _time.sleep(1 + _random.random())
-        # Rows BUFFER per file, yielded only after the whole archive
+        # Batches BUFFER per file, yielded only after the whole archive
         # parsed: the reference's file tier returns [] on a structural
         # failure (extract_documents_from_wat's broad except,
         # main.py:178-183), discarding links already extracted from
         # EARLIER records of that file — an incremental yield would
-        # leak them. The buffer is bounded by one archive's extracted
-        # links, exactly the reference's ``all_links`` list.
-        rows: list[tuple] = []
+        # leak them. Every BATCH_RECORDS records the pending column
+        # lists become one compact Arrow batch.
+        cols = url, alt, text, lpath, offsets, base, page, filename = (
+            [], [], [], [], [0], [], [], []
+        )
+        batches: list[pa.RecordBatch] = []
         try:
             for reader in _payload_readers(stream):
                 try:
                     data = _json.load(reader)
                 except Exception:  # noqa: BLE001 - malformed record: skip
                     continue
-                row = navigate(data)
-                if row is not None:
-                    rows.append(row)
+                # Envelope guards (main.py:146-153 ``in`` checks) fail
+                # a RECORD; any other structural error (missing
+                # Envelope / Container.Filename / WARC-Target-URI, a
+                # non-dict link, a non-string value when the batch is
+                # built) raises into the file tier.
+                envelope = data["Envelope"]
+                payload = envelope["Payload-Metadata"]
+                if "HTTP-Response-Metadata" not in payload:
+                    continue
+                html = payload["HTTP-Response-Metadata"]
+                if "HTML-Metadata" not in html:
+                    continue
+                meta = html["HTML-Metadata"]
+                # explicit None check: a present-but-null Links key
+                # must fail the guard (not TypeError into the file tier)
+                links = meta.get("Links")
+                if links is None:
+                    continue
+                # (meta.get("Head") or {}): a present-but-null Head
+                # would make the .get default useless, and the
+                # AttributeError would drop the whole archive — the
+                # same null trap as Links above
+                base.append((meta.get("Head") or {}).get("Base"))
+                page.append(envelope["WARC-Header-Metadata"]["WARC-Target-URI"])
+                filename.append(data["Container"]["Filename"])
+                for link in links:
+                    url.append(link.get("url"))
+                    alt.append(link.get("alt"))
+                    text.append(link.get("text"))
+                    lpath.append(link.get("path"))
+                offsets.append(len(url))
+                if len(page) == BATCH_RECORDS:
+                    batches.append(to_batch(*cols))
+                    for c in cols:
+                        c.clear()
+                    offsets.append(0)
+            if page:
+                batches.append(to_batch(*cols))
         except Exception:  # noqa: BLE001 - whole-file parse failure: drop ALL
             return
-        yield from rows
+        yield from batches
 
-    return iter_wat_records
+    return iter_wat_batches
 
 
-iter_wat_records = make_wat_record_iterator()
+iter_wat_batches = make_wat_batch_reader()
 
 
 def read_wat_archives(spark: SparkSession, wat_paths: list[str]) -> DataFrame:
@@ -455,9 +507,28 @@ def read_wat_archives(spark: SparkSession, wat_paths: list[str]) -> DataFrame:
 
     One Spark partition per WAT path so a 100 TB crawl parallelizes to
     one task per ~1 GB archive with no skew (reference main.py:273-274).
-    Each task runs :func:`iter_wat_records` on its path; everything
-    downstream (explode, predicates, dedup) is declarative.
+    Each task receives only its own path: ``parallelize`` pickles the
+    list once on the driver, one path per slice, and the JVM unpickles
+    it the way ``createDataFrame`` does a local list. No Python worker
+    feeds the paths, so the source costs a task one Python worker (the
+    ``mapInArrow``), and the function shipped to every task is the same
+    few kilobytes whatever the path count. Each task runs
+    :func:`iter_wat_batches` on its path and hands Spark Arrow batches;
+    everything downstream (explode, predicates, dedup) is declarative.
     """
     sc = spark.sparkContext
-    rdd = sc.parallelize(wat_paths, max(1, len(wat_paths))).flatMap(iter_wat_records)
-    return spark.createDataFrame(rdd, WAT_SCHEMA)
+    jvm = sc._jvm
+    pickled = sc.parallelize([(p,) for p in wat_paths], max(1, len(wat_paths)))
+    rows = jvm.SerDeUtil.toJavaArray(jvm.SerDeUtil.pythonToJava(pickled._jrdd, True))
+    path_schema = StructType([StructField("path", StringType())])
+    paths = DataFrame(
+        spark._jsparkSession.applySchemaToPythonRDD(rows.rdd(), path_schema.json()),
+        spark,
+    )
+
+    def archives(batches):
+        for batch in batches:
+            for path in batch.column(0).to_pylist():
+                yield from iter_wat_batches(path)
+
+    return paths.mapInArrow(archives, WAT_SCHEMA)

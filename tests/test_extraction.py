@@ -61,10 +61,15 @@ def test_jsonl_roundtrip(spark, tmp_path, wat_df):
 
 
 # Plan-node patterns: Spark's source scans print as "Scan ExistingRDD"
-# (the archive reader), "FileScan json" and "BatchScan"; the Python
-# boundary prints as ArrowEvalPython or BatchEvalPython.
+# (the archive reader's path feed, under its one MapInArrow), "FileScan
+# json" and "BatchScan"; the Python boundary prints as ArrowEvalPython
+# or BatchEvalPython.
 _SCAN = re.compile(r"\b(File|Batch)?Scan\b")
 _PY_EVAL = re.compile(r"(Arrow|Batch)EvalPython")
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.mark.parametrize("source", ["archives", "jsonl"])
@@ -78,11 +83,25 @@ def test_extraction_plan_scans_once_and_crosses_python_once(spark, tmp_path, sou
         _write_jsonl(p, FIXTURE_RECORDS)
         wat = read_wat_jsonl(spark, str(p))
     df = extract_document_links(wat, "image")
-    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    lines = _plan(df).splitlines()
     assert sum(1 for l in lines if _SCAN.search(l)) == 1
+    if source == "archives":
+        assert sum(1 for l in lines if "MapInArrow" in l) == 1
     assert sum(1 for l in lines if _PY_EVAL.search(l)) == 1
     got = sorted(tuple(r) for r in df.collect())
     assert got == sorted(oracle_extract(FIXTURE_RECORDS, "image"))
+
+
+def test_scan_pattern_counts_each_archive_read(spark):
+    """The scan pattern sees every archive read: a union of two reads
+    has two scans and two MapInArrow nodes, so the one-source assertions
+    above fail on a plan that decodes the archives twice."""
+    twice = read_wat_archives(spark, [FIXTURE_PATH]).unionByName(
+        read_wat_archives(spark, [FIXTURE_PATH])
+    )
+    lines = _plan(extract_document_links(twice, "image")).splitlines()
+    assert sum(1 for l in lines if _SCAN.search(l)) == 2
+    assert sum(1 for l in lines if "MapInArrow" in l) == 2
 
 
 # (page_url, base_raw, url) -> the absolute http(s) URL kept, or [].

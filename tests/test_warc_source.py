@@ -1,4 +1,5 @@
-"""Archive-source tests (S6/S7, sources/wat.read_wat_archives).
+"""Archive-source tests (S6/S7, sources/wat.read_wat_archives and its
+per-archive function ``iter_wat_batches``).
 
 The checked-in tiny.wat.warc.gz fixture holds the SAME envelopes as
 tests/wat_fixtures.FIXTURE_RECORDS plus a warcinfo record and a
@@ -23,10 +24,16 @@ import sys
 import time
 import types
 
+import pyarrow as pa
 import pytest
 
 from cc2dataset_spark.operators.extraction import extract_document_links
-from cc2dataset_spark.sources.wat import iter_wat_records, read_wat_archives
+from cc2dataset_spark.sources.wat import (
+    BATCH_RECORDS,
+    WAT_SCHEMA,
+    iter_wat_batches,
+    read_wat_archives,
+)
 from cc2dataset_spark.sources.warc_fallback import iter_warc_records
 from tests.fixtures.build_tiny_wat import FIXTURE_PATH, build_warc_bytes, build
 from tests.wat_fixtures import FIXTURE_RECORDS, oracle_extract
@@ -77,6 +84,10 @@ def test_fallback_parser_reads_plain_and_raises_on_truncation():
         list(iter_warc_records(io.BytesIO(b"HTTP/1.1 200 OK\r\n\r\n")))
 
 
+def _rows(batches) -> int:
+    return sum(b.num_rows for b in batches)
+
+
 def test_read_wat_archives_golden_records(spark):
     """Archive scan yields exactly the guard-passing fixture records:
     the warcinfo record is filtered by record type, the malformed-JSON
@@ -84,6 +95,28 @@ def test_read_wat_archives_golden_records(spark):
     the envelope guard inside the iterator."""
     df = read_wat_archives(spark, [FIXTURE_PATH])
     assert df.count() == len(_GUARDED)
+
+
+def test_batch_reader_matches_spark_scan(spark):
+    """The per-archive kernel's batches, read directly, are the Spark
+    scan's rows in order — null Base and null alt values included."""
+    kernel = pa.Table.from_batches(iter_wat_batches(FIXTURE_PATH)).to_pylist()
+    scan = [
+        r.asDict(recursive=True)
+        for r in read_wat_archives(spark, [FIXTURE_PATH]).collect()
+    ]
+    assert kernel == scan
+    H = ("Envelope", "Payload-Metadata", "HTTP-Response-Metadata", "HTML-Metadata")
+
+    def meta(row):
+        for k in H:
+            row = row[k]
+        return row
+
+    assert any(meta(r)["Head"]["Base"] is None for r in kernel)
+    assert any(
+        l["alt"] is None for r in kernel for l in meta(r)["Links"]
+    )
 
 
 @pytest.mark.parametrize(
@@ -149,8 +182,8 @@ def test_file_tier_drops_already_extracted_records(spark, tmp_path):
     fb = _gz_warc(
         tmp_path / "b.warc.gz", [good, b"{not json!!", good]
     )
-    assert read_wat_archives(spark, [fa]).count() == 0
-    assert read_wat_archives(spark, [fb]).count() == 2
+    assert _rows(iter_wat_batches(fa)) == 0
+    assert _rows(iter_wat_batches(fb)) == 2
     # both files in one scan: only file B's records survive
     assert read_wat_archives(spark, [fa, fb]).count() == 2
 
@@ -168,6 +201,109 @@ def test_wat_source_one_partition_per_archive(spark, tmp_path):
     df = read_wat_archives(spark, paths)
     assert df.rdd.getNumPartitions() == len(paths)
     assert df.rdd.glom().map(len).collect() == [1, 2, 3]
+
+
+def test_source_function_does_not_grow_with_the_path_count(spark, monkeypatch):
+    """Every task unpickles the function handed to mapInArrow, so it
+    must not carry the path list: its pickle is the same for one path
+    and for 10,000 (each task gets its own path from its partition)."""
+    from pyspark import cloudpickle
+
+    frame = type(spark.range(1))
+    real = frame.mapInArrow
+    sizes = []
+
+    def spy(self, func, schema, *args, **kwargs):
+        sizes.append(len(cloudpickle.dumps(func)))
+        return real(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "mapInArrow", spy)
+    read_wat_archives(spark, [FIXTURE_PATH])
+    many = read_wat_archives(spark, [f"/wat/{i:05d}.warc.wat.gz" for i in range(10_000)])
+    assert many.rdd.getNumPartitions() == 10_000
+    assert len(sizes) == 2 and sizes[0] == sizes[1]
+
+
+def _numbered_records(n: int) -> list[bytes]:
+    """``n`` guard-passing records whose page urls number them."""
+    import copy
+    import json
+
+    out = []
+    for i in range(n):
+        rec = copy.deepcopy(FIXTURE_RECORDS[0])
+        rec["Envelope"]["WARC-Header-Metadata"]["WARC-Target-URI"] = f"http://e.com/{i}"
+        out.append(json.dumps(rec, separators=(",", ":")).encode())
+    return out
+
+
+def _page_urls(batches) -> list[str]:
+    return [
+        r["Envelope"]["WARC-Header-Metadata"]["WARC-Target-URI"]
+        for r in pa.Table.from_batches(batches).to_pylist()
+    ]
+
+
+def test_batches_cross_chunk_boundaries_in_order(tmp_path):
+    """An archive longer than two chunks yields every row, in record
+    order, over more than two batches."""
+    n = 2 * BATCH_RECORDS + 1
+    path = _gz_warc(tmp_path / "long.warc.gz", _numbered_records(n))
+    batches = list(iter_wat_batches(path))
+    assert len(batches) >= 3
+    assert _page_urls(batches) == [f"http://e.com/{i}" for i in range(n)]
+
+
+def test_broken_last_record_drops_converted_chunks(tmp_path):
+    """The whole-file drop holds after earlier chunks already became
+    Arrow batches: a structurally broken last record yields nothing."""
+    records = _numbered_records(2 * BATCH_RECORDS) + [b'{"not_envelope": 1}']
+    path = _gz_warc(tmp_path / "broken.warc.gz", records)
+    assert list(iter_wat_batches(path)) == []
+
+
+def test_archive_of_guard_failures_yields_no_batch(spark, tmp_path):
+    """Records that all fail the envelope guards yield no batch at
+    all, and the scan over them is empty with WAT_SCHEMA."""
+    import json
+
+    null_links = next(r for r in FIXTURE_RECORDS if r not in _GUARDED)
+    no_html = {
+        "Envelope": {
+            "Payload-Metadata": {"HTTP-Response-Metadata": {}},
+            "WARC-Header-Metadata": {"WARC-Target-URI": "http://e.com/"},
+        },
+        "Container": {"Filename": "f.warc.gz"},
+    }
+    path = _gz_warc(
+        tmp_path / "guards.warc.gz",
+        [json.dumps(r).encode() for r in (null_links, no_html)],
+    )
+    assert list(iter_wat_batches(path)) == []
+    df = read_wat_archives(spark, [path])
+    assert df.schema == WAT_SCHEMA
+    assert df.count() == 0
+
+
+def test_non_string_link_value_drops_the_archive(tmp_path):
+    """A link value that is not a string or null is a structural
+    failure: the Arrow string column rejects it and the file tier drops
+    the whole archive, like a missing Envelope."""
+    import copy
+    import json
+
+    bad = copy.deepcopy(FIXTURE_RECORDS[0])
+    meta = bad["Envelope"]["Payload-Metadata"]["HTTP-Response-Metadata"]
+    meta["HTML-Metadata"]["Links"][0]["url"] = 123
+    good = json.dumps(FIXTURE_RECORDS[0]).encode()
+    path = _gz_warc(tmp_path / "int.warc.gz", [good, json.dumps(bad).encode()])
+    assert list(iter_wat_batches(path)) == []
+
+
+def test_read_wat_archives_of_no_paths_is_empty(spark):
+    df = read_wat_archives(spark, [])
+    assert df.schema == WAT_SCHEMA
+    assert df.count() == 0
 
 
 def _fsspec_failing_first(n: int, monkeypatch) -> list[str]:
@@ -195,11 +331,11 @@ def test_warc_iter_retries_flaky_io(monkeypatch):
     sleeps: list[float] = []
     monkeypatch.setattr(time, "sleep", sleeps.append)
     calls = _fsspec_failing_first(2, monkeypatch)
-    assert len(list(iter_wat_records(FIXTURE_PATH))) == len(_GUARDED)
+    assert _rows(iter_wat_batches(FIXTURE_PATH)) == len(_GUARDED)
     assert len(calls) == 3 and len(sleeps) == 2  # two failures + one success
 
     calls = _fsspec_failing_first(10, monkeypatch)
-    assert list(iter_wat_records(FIXTURE_PATH)) == []
+    assert list(iter_wat_batches(FIXTURE_PATH)) == []
     assert len(calls) == 10  # exhausted, skipped silently
 
 
@@ -211,7 +347,7 @@ def test_remote_path_without_fsspec_fails_loudly(monkeypatch):
     monkeypatch.setattr(time, "sleep", sleeps.append)
     monkeypatch.setitem(sys.modules, "fsspec", None)
     with pytest.raises(NotImplementedError, match="requires fsspec"):
-        list(iter_wat_records("s3://commoncrawl/a.warc.wat.gz"))
+        list(iter_wat_batches("s3://commoncrawl/a.warc.wat.gz"))
     assert sleeps == []
 
 
@@ -229,12 +365,12 @@ def test_archive_reader_runs_where_the_package_is_not_importable(tmp_path):
         "except ImportError:\n"
         "    pass\n"
         "fn = pickle.loads(sys.stdin.buffer.read())\n"
-        "print(sum(1 for _ in fn(sys.argv[1])))\n"
+        "print(sum(b.num_rows for b in fn(sys.argv[1])))\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
         [sys.executable, "-c", code, FIXTURE_PATH],
-        input=cloudpickle.dumps(iter_wat_records),
+        input=cloudpickle.dumps(iter_wat_batches),
         capture_output=True, cwd=tmp_path, env=env, timeout=120,
     )
     assert out.returncode == 0, out.stderr.decode()
