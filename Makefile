@@ -1,4 +1,4 @@
-.PHONY: test test-full bench bench-wat bench-wat-trace verify plans lint
+.PHONY: test test-full bench bench-wat bench-wat-trace verify plans lint loc
 
 test:
 	python -m pytest tests/ -q
@@ -28,3 +28,8 @@ plans:
 
 lint:
 	python -m compileall -q cc2dataset_spark tests bench.py __spark_entry__.py
+
+# .py line counts of the package and the tests (ROADMAP aim 2)
+loc:
+	@echo "package $$(cat $$(find cc2dataset_spark -name '*.py') | wc -l)"
+	@echo "tests $$(cat $$(find tests -name '*.py') | wc -l)"

@@ -26,16 +26,26 @@ from cc2dataset_spark.functions.links import (
 _HTML_META = "Envelope.`Payload-Metadata`.`HTTP-Response-Metadata`.`HTML-Metadata`"
 
 
-def _guarded(wat_df: DataFrame) -> DataFrame:
-    """Envelope guards (P9): null-propagating struct access replaces
-    the reference's `if X not in Y: continue` (main.py:146-155)."""
-    links_col = F.col(f"{_HTML_META}.Links")
-    base_raw = F.col(f"{_HTML_META}.Head.Base")
+def _envelope():
+    """The navigated WAT fields and the guard every kept record passes."""
+    links = F.col(f"{_HTML_META}.Links")
     page_url = F.col("Envelope.`WARC-Header-Metadata`.`WARC-Target-URI`")
     cc_filename = F.col("Container.Filename")
-    return wat_df.where(links_col.isNotNull() & page_url.isNotNull()).select(
-        links_col.alias("links"),
-        base_raw.alias("base_raw"),
+    passes = links.isNotNull() & page_url.isNotNull() & cc_filename.isNotNull()
+    return links, page_url, cc_filename, passes
+
+
+def _guarded(wat_df: DataFrame) -> DataFrame:
+    """Envelope guards (P9): null-propagating struct access replaces
+    the reference's `if X not in Y: continue` (main.py:146-155) and its
+    `[]` indexing of Container.Filename and WARC-Target-URI, which never
+    emits a row without them (main.py:156-159). The one place a WAT
+    record is accepted or skipped: a malformed payload is an all-null
+    row here, whichever source parsed it."""
+    links, page_url, cc_filename, passes = _envelope()
+    return wat_df.where(passes).select(
+        links.alias("links"),
+        F.col(f"{_HTML_META}.Head.Base").alias("base_raw"),
         page_url.alias("page_url"),
         cc_filename.alias("cc_filename"),
     )
@@ -91,12 +101,11 @@ def extraction_stats(wat_df: DataFrame, document_type: str) -> DataFrame:
     in the same bucket; split per tier by diffing counts between
     stages if a loss investigation needs it).
     """
-    links_col = F.col(f"{_HTML_META}.Links")
-    page_url = F.col("Envelope.`WARC-Header-Metadata`.`WARC-Target-URI`")
+    links, _, _, passes = _envelope()
     per_record = wat_df.select(
         F.lit(1).alias("_rec"),
-        (links_col.isNull() | page_url.isNull()).alias("_no_links"),
-        F.coalesce(F.size(links_col), F.lit(0)).alias("_n_links"),
+        (~passes).alias("_no_links"),
+        F.coalesce(F.size(links), F.lit(0)).alias("_n_links"),
     )
     totals = per_record.agg(
         F.count("*").alias("records_total"),

@@ -13,10 +13,10 @@ publishes): a record is
 Common Crawl archives store ONE GZIP MEMBER PER RECORD; Python's gzip
 module reads concatenated members transparently, so the whole archive
 decompresses as a single stream of records. This parser reads that
-stream strictly (a structurally broken record raises, which the caller
-maps to the reference's whole-file containment tier, main.py:190-200);
-record-level semantic problems (malformed JSON payloads) stay the
-caller's record-tier concern.
+stream strictly: a structurally broken record raises, and the caller
+ends the archive there, keeping every record framed before it.
+Payloads are not parsed here; a malformed JSON payload is Spark's
+``from_json`` concern (an all-null row the envelope guards drop).
 
 The iterator is constructed inside a factory and exported as the
 factory's return value: cloudpickle pickles functions whose qualname

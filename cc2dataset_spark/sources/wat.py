@@ -1,20 +1,25 @@
 """WAT/WARC sources (SURVEY.md §2.1 S1-S10).
 
-Two ingestion paths:
+Two ingestion paths, one JSON decoder:
 
 1. ``read_wat_archives`` — real gzipped WARC archives, the default.
-   Binary WARC decoding has no Spark primitive, so this is the one
-   Python-decoded source: a ``mapInArrow`` over the paths, one Spark
-   partition per WAT path exactly like the reference's
-   ``sc.parallelize(paths, len(paths))`` at main.py:274, and each task
-   hands Spark Arrow record batches shaped by an EXPLICIT schema (no
-   sampling inference, no pickled rows). The per-archive function ships
-   by value, so executors need only pyspark; fastwarc and fsspec are
-   used when installed.
+   Python frames, Spark parses. WARC framing has no Spark primitive
+   for ``https://`` archives, so a ``mapInArrow`` over the paths (one
+   Spark partition per WAT path exactly like the reference's
+   ``sc.parallelize(paths, len(paths))`` at main.py:274) opens, retries
+   and frames each archive, and hands Spark its raw metadata payloads
+   as ``value: binary`` Arrow batches. Spark parses them with
+   ``from_json`` and ``WAT_SCHEMA``. The per-archive function ships by
+   value, so executors need only pyspark; fastwarc and fsspec are used
+   when installed.
 2. ``read_wat_jsonl`` — the hermetic twin: JSON-lines of WAT envelopes
-   via ``spark.read.schema(WAT_SCHEMA).json`` (schema-on-read, no
-   inference; malformed rows -> nulls, dropped by the envelope guards,
-   mirroring the reference's skip-and-log at main.py:139-143).
+   read with ``spark.read.text``, one payload per line.
+
+Both end in :func:`_parse_wat_payloads`, so they return the same rows
+for the same payloads: one per record, schema-on-read with no
+inference, a malformed payload as an all-null row. The envelope guards
+of ``operators/extraction.py`` drop that row, mirroring the reference's
+skip-and-log at main.py:139-143.
 
 Index discovery (S1-S5) lists crawl indexes and samples WAT paths;
 network listing is driver-side (it is a metadata operation), the
@@ -114,9 +119,25 @@ EXTRACT_SCHEMA = StructType(
 )
 
 
-def read_wat_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """WAT envelopes as JSON lines with schema-on-read."""
-    return spark.read.schema(WAT_SCHEMA).json(path)
+def _parse_wat_payloads(payloads: DataFrame) -> DataFrame:
+    """One WAT JSON payload per row (a ``value`` column, string or
+    binary) -> DataFrame[WAT_SCHEMA], one row per payload: the decoder
+    of both readers.
+
+    Binary is cast to string unvalidated and Jackson reads it as UTF-8,
+    so a non-UTF-8 byte becomes U+FFFD; a malformed payload becomes an
+    all-null row. ``inline(array(from_json(...)))`` is a ``Generate``,
+    so the parse runs once per record: ``select(from_json(...)
+    .alias("r")).select("r.*")`` would let the optimizer copy the parse
+    into the envelope guards' ``Filter`` and run it three times.
+    """
+    parsed = F.from_json(F.col("value").cast("string"), WAT_SCHEMA)
+    return payloads.select(F.inline(F.array(parsed)))
+
+
+def read_wat_jsonl(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """WAT envelopes as JSON lines with schema-on-read, one row per line."""
+    return _parse_wat_payloads(spark.read.text(path))
 
 
 # ---------------------------------------------------------------------------
@@ -320,72 +341,36 @@ def read_wat_index(
 # Archive source (S6-S10) — one mapInArrow task per archive
 # ---------------------------------------------------------------------------
 
-# Records per Arrow batch: bounds the Python column lists of an archive
-# in flight and keeps every string array far below Arrow's 2 GB int32
-# offset limit on full-size WATs.
+# Payloads per Arrow batch: bounds what an archive task holds in flight
+# and keeps each binary array far below Arrow's 2 GB int32 offset limit.
 BATCH_RECORDS = 1024
 
 
 def make_wat_batch_reader():
     """Build the per-archive function of :func:`read_wat_archives`:
-    WAT path -> ``pyarrow.RecordBatch`` es shaped exactly like
-    WAT_SCHEMA.
+    WAT path -> one-column ``value: binary`` ``pyarrow.RecordBatch`` es
+    of raw metadata payloads, ``BATCH_RECORDS`` per batch, in archive
+    order. Spark parses them (see :func:`read_wat_archives`).
 
     Built in a factory like ``warc_fallback.make_warc_record_iterator``:
     cloudpickle ships a function whose qualname is not importable BY
-    VALUE, together with the navigation and the WARC parser it closes
-    over, so executors need nothing beyond pyspark (and its pyarrow).
+    VALUE, together with the WARC parser it closes over, so executors
+    need nothing beyond pyspark (and its pyarrow).
 
-    The function mirrors the reference's 3-tier error containment
-    (main.py:141-143, 178-183, 190-200): record-level skip, file-level
-    skip, and a whole-file read retried 10 times with jitter."""
+    Containment: the whole-file read is retried 10 times with jitter
+    and the archive is then skipped (the reference's file tier,
+    main.py:190-200); a WARC framing error ends the archive, keeping
+    every payload framed before it."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     from cc2dataset_spark.sources.warc_fallback import iter_warc_records
 
-    schema = to_arrow_schema(WAT_SCHEMA)
-    envelope_t = schema.field("Envelope").type
-    container_t = schema.field("Container").type
-    payload_t = envelope_t.field("Payload-Metadata").type
-    warc_t = envelope_t.field("WARC-Header-Metadata").type
-    response_t = payload_t.field("HTTP-Response-Metadata").type
-    html_t = response_t.field("HTML-Metadata").type
-    links_t = html_t.field("Links").type
-    head_t = html_t.field("Head").type
-
-    def struct(t, *children):
-        return pa.StructArray.from_arrays(children, fields=list(t))
-
-    def strings(values: list):
-        return pa.array(values, pa.string())
-
-    def to_batch(url, alt, text, lpath, offsets, base, page, filename):
-        """Pending column lists -> one WAT_SCHEMA record batch."""
-        links = pa.ListArray.from_arrays(
-            pa.array(offsets, pa.int32()),
-            struct(links_t.value_type, *map(strings, (url, alt, text, lpath))),
-            type=links_t,
-        )
-        html = struct(html_t, links, struct(head_t, strings(base)))
-        envelope = struct(
-            envelope_t,
-            struct(payload_t, struct(response_t, html)),
-            struct(warc_t, strings(page)),
-        )
-        return pa.RecordBatch.from_arrays(
-            [envelope, struct(container_t, strings(filename))], schema=schema
-        )
+    schema = pa.schema([pa.field("value", pa.binary())])
 
     def iter_wat_batches(path: str) -> Iterator[pa.RecordBatch]:
         import random as _random
         import time as _time
         from io import BytesIO
-
-        try:
-            import simdjson as _json
-        except ImportError:  # pragma: no cover - container-dependent
-            import json as _json
 
         def _open(p: str):
             try:
@@ -407,21 +392,21 @@ def make_wat_batch_reader():
                     ) from None
                 return open(p.removeprefix("file://"), "rb")
 
-        def _payload_readers(stream) -> Iterator:
-            """metadata-record payload streams, via fastwarc when
-            installed, else the stdlib WARC parser (identical record
-            selection: WARC-Type == metadata)."""
+        def _payloads(stream) -> Iterator[bytes]:
+            """metadata-record payloads, via fastwarc when installed,
+            else the stdlib WARC parser (identical record selection:
+            WARC-Type == metadata)."""
             try:
                 from fastwarc.warc import ArchiveIterator, WarcRecordType
             except ImportError:
                 for wtype, _headers, payload in iter_warc_records(stream):
                     if wtype == "metadata":
-                        yield BytesIO(payload)
+                        yield payload
                 return
             for record in ArchiveIterator(
                 stream, record_types=WarcRecordType.metadata, parse_http=False
             ):
-                yield record.reader
+                yield record.reader.read()
 
         attempts = 10  # the reference's retry budget (main.py:190-200)
         for i in range(attempts):
@@ -437,64 +422,17 @@ def make_wat_batch_reader():
                 if i == attempts - 1:
                     return
                 _time.sleep(1 + _random.random())
-        # Batches BUFFER per file, yielded only after the whole archive
-        # parsed: the reference's file tier returns [] on a structural
-        # failure (extract_documents_from_wat's broad except,
-        # main.py:178-183), discarding links already extracted from
-        # EARLIER records of that file — an incremental yield would
-        # leak them. Every BATCH_RECORDS records the pending column
-        # lists become one compact Arrow batch.
-        cols = url, alt, text, lpath, offsets, base, page, filename = (
-            [], [], [], [], [0], [], [], []
-        )
-        batches: list[pa.RecordBatch] = []
+        values: list[bytes] = []
         try:
-            for reader in _payload_readers(stream):
-                try:
-                    data = _json.load(reader)
-                except Exception:  # noqa: BLE001 - malformed record: skip
-                    continue
-                # Envelope guards (main.py:146-153 ``in`` checks) fail
-                # a RECORD; any other structural error (missing
-                # Envelope / Container.Filename / WARC-Target-URI, a
-                # non-dict link, a non-string value when the batch is
-                # built) raises into the file tier.
-                envelope = data["Envelope"]
-                payload = envelope["Payload-Metadata"]
-                if "HTTP-Response-Metadata" not in payload:
-                    continue
-                html = payload["HTTP-Response-Metadata"]
-                if "HTML-Metadata" not in html:
-                    continue
-                meta = html["HTML-Metadata"]
-                # explicit None check: a present-but-null Links key
-                # must fail the guard (not TypeError into the file tier)
-                links = meta.get("Links")
-                if links is None:
-                    continue
-                # (meta.get("Head") or {}): a present-but-null Head
-                # would make the .get default useless, and the
-                # AttributeError would drop the whole archive — the
-                # same null trap as Links above
-                base.append((meta.get("Head") or {}).get("Base"))
-                page.append(envelope["WARC-Header-Metadata"]["WARC-Target-URI"])
-                filename.append(data["Container"]["Filename"])
-                for link in links:
-                    url.append(link.get("url"))
-                    alt.append(link.get("alt"))
-                    text.append(link.get("text"))
-                    lpath.append(link.get("path"))
-                offsets.append(len(url))
-                if len(page) == BATCH_RECORDS:
-                    batches.append(to_batch(*cols))
-                    for c in cols:
-                        c.clear()
-                    offsets.append(0)
-            if page:
-                batches.append(to_batch(*cols))
-        except Exception:  # noqa: BLE001 - whole-file parse failure: drop ALL
-            return
-        yield from batches
+            for payload in _payloads(stream):
+                values.append(payload)
+                if len(values) == BATCH_RECORDS:
+                    yield pa.record_batch([pa.array(values, pa.binary())], schema)
+                    values = []
+        except Exception:  # noqa: BLE001 - framing error: the archive ends here
+            pass
+        if values:
+            yield pa.record_batch([pa.array(values, pa.binary())], schema)
 
     return iter_wat_batches
 
@@ -503,18 +441,19 @@ iter_wat_batches = make_wat_batch_reader()
 
 
 def read_wat_archives(spark: SparkSession, wat_paths: list[str]) -> DataFrame:
-    """WAT archives -> DataFrame[WAT_SCHEMA].
+    """WAT archives -> DataFrame[WAT_SCHEMA], one row per metadata
+    record: exactly the rows :func:`read_wat_jsonl` returns for a file
+    of the same payloads.
 
     One Spark partition per WAT path so a 100 TB crawl parallelizes to
     one task per ~1 GB archive with no skew (reference main.py:273-274).
     Each task receives only its own path: ``parallelize`` pickles the
     list once on the driver, one path per slice, and the JVM unpickles
     it the way ``createDataFrame`` does a local list. No Python worker
-    feeds the paths, so the source costs a task one Python worker (the
-    ``mapInArrow``), and the function shipped to every task is the same
+    feeds the paths, and the function shipped to every task is the same
     few kilobytes whatever the path count. Each task runs
-    :func:`iter_wat_batches` on its path and hands Spark Arrow batches;
-    everything downstream (explode, predicates, dedup) is declarative.
+    :func:`iter_wat_batches` on its path in a ``mapInArrow``, and
+    :func:`_parse_wat_payloads` parses the payloads in Spark.
     """
     sc = spark.sparkContext
     jvm = sc._jvm
@@ -531,4 +470,6 @@ def read_wat_archives(spark: SparkSession, wat_paths: list[str]) -> DataFrame:
             for path in batch.column(0).to_pylist():
                 yield from iter_wat_batches(path)
 
-    return paths.mapInArrow(archives, WAT_SCHEMA)
+    # binary, not string: one non-UTF-8 payload would fail its whole
+    # batch's Arrow string array
+    return _parse_wat_payloads(paths.mapInArrow(archives, "value binary"))

@@ -2,14 +2,14 @@
 
 A real (if small) gzipped WARC whose ``metadata`` records carry the
 same WAT JSON envelopes as tests/wat_fixtures.FIXTURE_RECORDS — so the
-fastwarc archive path (sources/wat.read_wat_archives) can be tested
+archive reader (sources/wat.read_wat_archives) can be tested
 against the exact same pure-Python oracle as the jsonl twin, golden-
 count style like the reference's tests/test_single_warc.py:22-54.
 
 Extra records exercise the containment tiers:
 - a ``warcinfo`` record (must be ignored: record_types=metadata),
-- a metadata record with a malformed JSON payload (record-level skip,
-  main.py:141-143).
+- a metadata record with a malformed JSON payload (an all-null row the
+  envelope guards skip, main.py:141-143).
 
 Deterministic output: fixed WARC-Date/Record-IDs and gzip mtime=0 —
 rebuilding the fixture yields identical bytes.
@@ -81,7 +81,7 @@ def build_warc_bytes() -> bytes:
                 payload,
             )
         )
-    # malformed JSON payload -> record-level skip (main.py:141-143)
+    # malformed JSON payload -> all-null row, skipped by the guards
     buf.write(
         _warc_record(
             "metadata",

@@ -62,7 +62,7 @@ def test_jsonl_roundtrip(spark, tmp_path, wat_df):
 
 # Plan-node patterns: Spark's source scans print as "Scan ExistingRDD"
 # (the archive reader's path feed, under its one MapInArrow), "FileScan
-# json" and "BatchScan"; the Python boundary prints as ArrowEvalPython
+# text" and "BatchScan"; the Python boundary prints as ArrowEvalPython
 # or BatchEvalPython.
 _SCAN = re.compile(r"\b(File|Batch)?Scan\b")
 _PY_EVAL = re.compile(r"(Arrow|Batch)EvalPython")
@@ -75,7 +75,9 @@ def _plan(df) -> str:
 @pytest.mark.parametrize("source", ["archives", "jsonl"])
 def test_extraction_plan_scans_once_and_crosses_python_once(spark, tmp_path, source):
     """Each WAT is decoded once and each link crosses into Python once:
-    the executed plan has one source scan and one Python evaluation."""
+    the executed plan has one source scan, one JSON parse and one Python
+    evaluation. (A ``select("r.*")`` over the parsed struct would copy
+    the parse into the guard Filter: three ``from_json``.)"""
     if source == "archives":
         wat = read_wat_archives(spark, [FIXTURE_PATH])
     else:
@@ -85,6 +87,7 @@ def test_extraction_plan_scans_once_and_crosses_python_once(spark, tmp_path, sou
     df = extract_document_links(wat, "image")
     lines = _plan(df).splitlines()
     assert sum(1 for l in lines if _SCAN.search(l)) == 1
+    assert _plan(df).count("from_json(") == 1
     if source == "archives":
         assert sum(1 for l in lines if "MapInArrow" in l) == 1
     assert sum(1 for l in lines if _PY_EVAL.search(l)) == 1

@@ -36,8 +36,8 @@ def wat_jsonl(tmp_path_factory):
 
 @pytest.fixture(autouse=True)
 def _jsonl_archive_source(monkeypatch):
-    """Swap the fastwarc archive source for the jsonl source so the
-    orchestration layer runs hermetically."""
+    """Swap the archive source for its jsonl twin, which parses the same
+    payloads the same way, so the orchestration tests need no archives."""
     monkeypatch.setattr(
         pipeline,
         "read_wat_archives",

@@ -6,7 +6,8 @@ tests/wat_fixtures.FIXTURE_RECORDS plus a warcinfo record and a
 malformed-JSON record, so the archive path is checked golden-count
 style against the same pure-Python oracle as the jsonl twin — the
 rebuild's hermetic version of the reference's pinned-WAT golden tests
-(/root/reference/tests/test_single_warc.py:22-54).
+(reference tests/test_single_warc.py:22-54). The archive reader's rows
+are pinned to the jsonl reader's rows for the same payloads.
 
 The archive path no longer gates on fastwarc: when it is absent (as
 in the build sandbox) the stdlib gzip-member parser
@@ -17,7 +18,9 @@ assertions cover the fast path instead.
 
 from __future__ import annotations
 
+import copy
 import io
+import json
 import os
 import subprocess
 import sys
@@ -33,21 +36,14 @@ from cc2dataset_spark.sources.wat import (
     WAT_SCHEMA,
     iter_wat_batches,
     read_wat_archives,
+    read_wat_jsonl,
 )
 from cc2dataset_spark.sources.warc_fallback import iter_warc_records
 from tests.fixtures.build_tiny_wat import FIXTURE_PATH, build_warc_bytes, build
 from tests.wat_fixtures import FIXTURE_RECORDS, oracle_extract
 
-# The fixture records that pass the envelope guards: the archive
-# reader drops the null-Links record before emitting rows.
-_GUARDED = [
-    r
-    for r in FIXTURE_RECORDS
-    if r["Envelope"]["Payload-Metadata"]["HTTP-Response-Metadata"][
-        "HTML-Metadata"
-    ]["Links"]
-    is not None
-]
+# The fixture's metadata payloads: FIXTURE_RECORDS plus one malformed.
+_FIXTURE_PAYLOADS = len(FIXTURE_RECORDS) + 1
 
 
 def test_fixture_is_deterministic_and_checked_in():
@@ -88,37 +84,6 @@ def _rows(batches) -> int:
     return sum(b.num_rows for b in batches)
 
 
-def test_read_wat_archives_golden_records(spark):
-    """Archive scan yields exactly the guard-passing fixture records:
-    the warcinfo record is filtered by record type, the malformed-JSON
-    record is skipped at record level, and the null-Links record fails
-    the envelope guard inside the iterator."""
-    df = read_wat_archives(spark, [FIXTURE_PATH])
-    assert df.count() == len(_GUARDED)
-
-
-def test_batch_reader_matches_spark_scan(spark):
-    """The per-archive kernel's batches, read directly, are the Spark
-    scan's rows in order — null Base and null alt values included."""
-    kernel = pa.Table.from_batches(iter_wat_batches(FIXTURE_PATH)).to_pylist()
-    scan = [
-        r.asDict(recursive=True)
-        for r in read_wat_archives(spark, [FIXTURE_PATH]).collect()
-    ]
-    assert kernel == scan
-    H = ("Envelope", "Payload-Metadata", "HTTP-Response-Metadata", "HTML-Metadata")
-
-    def meta(row):
-        for k in H:
-            row = row[k]
-        return row
-
-    assert any(meta(r)["Head"]["Base"] is None for r in kernel)
-    assert any(
-        l["alt"] is None for r in kernel for l in meta(r)["Links"]
-    )
-
-
 @pytest.mark.parametrize(
     "document_type", ["image", "image_only", "audio", "text", "video"]
 )
@@ -141,9 +106,10 @@ def test_build_writes_fixture(tmp_path):
         assert f1.read() == f2.read()
 
 
-def _gz_warc(path, payloads):
+def _gz_warc(path, payloads, tail=b""):
     """Write a gzipped WARC of metadata records with the given JSON
-    payload bytes (reusing the fixture builder's record writer)."""
+    payload bytes (reusing the fixture builder's record writer),
+    followed by the raw bytes ``tail``."""
     import gzip
 
     from tests.fixtures.build_tiny_wat import _warc_record
@@ -161,39 +127,99 @@ def _gz_warc(path, payloads):
                 payload,
             )
         )
+    buf.write(tail)
     with open(path, "wb") as f:
         f.write(gzip.compress(buf.getvalue(), mtime=0))
     return str(path)
 
 
-def test_file_tier_drops_already_extracted_records(spark, tmp_path):
-    """Reference containment parity (main.py:178-183): a structural
-    failure (valid JSON, missing 'Envelope') anywhere in a file drops
-    the WHOLE file's links — including records already parsed BEFORE
-    the failure point (the reference returns [], discarding its
-    all_links buffer). A malformed-JSON record, by contrast, is a
-    record-tier skip that keeps the rest of ITS file."""
-    import json
+def _payload(rec) -> bytes:
+    return json.dumps(rec, separators=(",", ":")).encode()
 
-    good = json.dumps(FIXTURE_RECORDS[0], separators=(",", ":")).encode()
-    # file A: good record THEN a structurally-broken one -> drop ALL
+
+def _good() -> dict:
+    return copy.deepcopy(FIXTURE_RECORDS[0])
+
+
+def _links(rec) -> list:
+    meta = rec["Envelope"]["Payload-Metadata"]["HTTP-Response-Metadata"]
+    return meta["HTML-Metadata"]["Links"]
+
+
+def _extract(df, document_type="image") -> list[tuple]:
+    return sorted(tuple(r) for r in extract_document_links(df, document_type).collect())
+
+
+def _oracle(records, document_type="image") -> list[tuple]:
+    return sorted(oracle_extract(records, document_type))
+
+
+def _parity_payloads() -> list[bytes]:
+    """The fixture records (the null-Links one included) and every edge
+    the two readers must agree on."""
+    number_url = _good()
+    _links(number_url)[0]["url"] = 123
+    no_container = _good()
+    del no_container["Container"]
+    non_utf8 = _payload(_good()).replace(b'"A cat"', b'"A\xffcat"')
+    assert b"\xff" in non_utf8
+    return [_payload(r) for r in FIXTURE_RECORDS] + [
+        b"{not json!!",
+        _payload(number_url),
+        non_utf8,
+        _payload(no_container),
+    ]
+
+
+def test_archive_rows_equal_jsonl_rows(spark, tmp_path):
+    """One contract: the archive reader returns exactly the jsonl
+    reader's rows for the same payloads, in order, one per record — a
+    malformed payload as an all-null row, a JSON number in a string
+    field as its text, a non-UTF-8 byte as U+FFFD."""
+    payloads = _parity_payloads()
+    archive = _gz_warc(tmp_path / "parity.warc.gz", payloads)
+    jsonl = tmp_path / "parity.jsonl"
+    jsonl.write_bytes(b"\n".join(payloads) + b"\n")
+    df = read_wat_archives(spark, [archive])
+    assert df.schema == WAT_SCHEMA
+    rows = df.collect()
+    assert rows == read_wat_jsonl(spark, str(jsonl)).collect()
+    assert len(rows) == len(payloads)
+    n = len(FIXTURE_RECORDS)
+    assert [r.asDict(recursive=True) for r in rows[:n]] == FIXTURE_RECORDS
+    malformed, number_url, non_utf8, no_container = (
+        r.asDict(recursive=True) for r in rows[n:]
+    )
+    assert malformed == {"Envelope": None, "Container": None}
+    assert _links(number_url)[0]["url"] == "123"
+    assert _links(non_utf8)[0]["alt"] == "A\ufffdcat"
+    assert no_container["Container"] is None
+    assert _links(no_container) == _links(FIXTURE_RECORDS[0])
+
+
+def test_file_tier_drops_already_extracted_records(spark, tmp_path):
+    """A structurally broken record (valid JSON, no 'Envelope') drops
+    only itself, like a malformed-JSON record: the envelope guards skip
+    its all-null fields and the good records of its file are kept. (The
+    reference's broad except, main.py:178-183, dropped the whole file.)"""
+    good = _payload(FIXTURE_RECORDS[0])
+    # file A: good record THEN a structurally broken one
     fa = _gz_warc(tmp_path / "a.warc.gz", [good, b'{"not_envelope": 1}'])
-    # file B: malformed JSON between two good records -> keep both
+    # file B: malformed JSON between two good records
     fb = _gz_warc(
         tmp_path / "b.warc.gz", [good, b"{not json!!", good]
     )
-    assert _rows(iter_wat_batches(fa)) == 0
-    assert _rows(iter_wat_batches(fb)) == 2
-    # both files in one scan: only file B's records survive
-    assert read_wat_archives(spark, [fa, fb]).count() == 2
+    assert _rows(iter_wat_batches(fa)) == 2
+    assert _rows(iter_wat_batches(fb)) == 3
+    df = read_wat_archives(spark, [fa, fb])
+    assert df.count() == 5
+    assert _extract(df) == _oracle([FIXTURE_RECORDS[0]] * 3)
 
 
 def test_wat_source_one_partition_per_archive(spark, tmp_path):
     """The archive scan plans one partition per input archive, so a
     failing file drops only its own partition's rows."""
-    import json
-
-    good = json.dumps(FIXTURE_RECORDS[0], separators=(",", ":")).encode()
+    good = _payload(FIXTURE_RECORDS[0])
     paths = [
         _gz_warc(tmp_path / f"{name}.warc.gz", [good] * n)
         for name, n in (("a", 1), ("b", 2), ("c", 3))
@@ -225,49 +251,56 @@ def test_source_function_does_not_grow_with_the_path_count(spark, monkeypatch):
 
 
 def _numbered_records(n: int) -> list[bytes]:
-    """``n`` guard-passing records whose page urls number them."""
-    import copy
-    import json
-
+    """``n`` guard-passing payloads whose page urls number them."""
     out = []
     for i in range(n):
-        rec = copy.deepcopy(FIXTURE_RECORDS[0])
+        rec = _good()
         rec["Envelope"]["WARC-Header-Metadata"]["WARC-Target-URI"] = f"http://e.com/{i}"
-        out.append(json.dumps(rec, separators=(",", ":")).encode())
+        out.append(_payload(rec))
     return out
 
 
-def _page_urls(batches) -> list[str]:
-    return [
-        r["Envelope"]["WARC-Header-Metadata"]["WARC-Target-URI"]
-        for r in pa.Table.from_batches(batches).to_pylist()
-    ]
+def _values(batches) -> list[bytes]:
+    return [v for b in batches for v in b.column("value").to_pylist()]
+
+
+def _metadata_payloads(path) -> list[bytes]:
+    with open(path, "rb") as f:
+        return [p for t, _h, p in iter_warc_records(f) if t == "metadata"]
 
 
 def test_batches_cross_chunk_boundaries_in_order(tmp_path):
-    """An archive longer than two chunks yields every row, in record
-    order, over more than two batches."""
+    """The kernel's batches are one ``value: binary`` column holding the
+    archive's metadata payloads, byte for byte and in record order,
+    ``BATCH_RECORDS`` per batch (the warcinfo record is not one)."""
     n = 2 * BATCH_RECORDS + 1
     path = _gz_warc(tmp_path / "long.warc.gz", _numbered_records(n))
-    batches = list(iter_wat_batches(path))
-    assert len(batches) >= 3
-    assert _page_urls(batches) == [f"http://e.com/{i}" for i in range(n)]
+    cases = ((path, [BATCH_RECORDS, BATCH_RECORDS, 1]), (FIXTURE_PATH, [_FIXTURE_PAYLOADS]))
+    for archive, sizes in cases:
+        batches = list(iter_wat_batches(archive))
+        assert [b.num_rows for b in batches] == sizes
+        assert all(b.schema == pa.schema([("value", pa.binary())]) for b in batches)
+        assert _values(batches) == _metadata_payloads(archive)
+    assert _values(iter_wat_batches(path)) == _numbered_records(n)
 
 
 def test_broken_last_record_drops_converted_chunks(tmp_path):
-    """The whole-file drop holds after earlier chunks already became
-    Arrow batches: a structurally broken last record yields nothing."""
-    records = _numbered_records(2 * BATCH_RECORDS) + [b'{"not_envelope": 1}']
-    path = _gz_warc(tmp_path / "broken.warc.gz", records)
-    assert list(iter_wat_batches(path)) == []
+    """A WARC framing error ends the archive: every payload framed
+    before it is kept, here two full batches before a truncated record."""
+    records = _numbered_records(2 * BATCH_RECORDS)
+    truncated = b"WARC/1.0\r\nWARC-Type: metadata\r\nContent-Length: 500\r\n\r\n{"
+    path = _gz_warc(tmp_path / "broken.warc.gz", records, tail=truncated)
+    with pytest.raises(ValueError, match="truncated"):
+        _metadata_payloads(path)
+    batches = list(iter_wat_batches(path))
+    assert [b.num_rows for b in batches] == [BATCH_RECORDS, BATCH_RECORDS]
+    assert _values(batches) == records
 
 
 def test_archive_of_guard_failures_yields_no_batch(spark, tmp_path):
-    """Records that all fail the envelope guards yield no batch at
-    all, and the scan over them is empty with WAT_SCHEMA."""
-    import json
-
-    null_links = next(r for r in FIXTURE_RECORDS if r not in _GUARDED)
+    """Records that all fail the envelope guards are still read, one
+    row each with WAT_SCHEMA, and extraction over them is empty."""
+    null_links = next(r for r in FIXTURE_RECORDS if _links(r) is None)
     no_html = {
         "Envelope": {
             "Payload-Metadata": {"HTTP-Response-Metadata": {}},
@@ -277,27 +310,46 @@ def test_archive_of_guard_failures_yields_no_batch(spark, tmp_path):
     }
     path = _gz_warc(
         tmp_path / "guards.warc.gz",
-        [json.dumps(r).encode() for r in (null_links, no_html)],
+        [_payload(r) for r in (null_links, no_html)],
     )
-    assert list(iter_wat_batches(path)) == []
+    assert _rows(iter_wat_batches(path)) == 2
     df = read_wat_archives(spark, [path])
     assert df.schema == WAT_SCHEMA
-    assert df.count() == 0
+    assert df.count() == 2
+    assert _extract(df, "image_only") == []
 
 
-def test_non_string_link_value_drops_the_archive(tmp_path):
-    """A link value that is not a string or null is a structural
-    failure: the Arrow string column rejects it and the file tier drops
-    the whole archive, like a missing Envelope."""
-    import copy
-    import json
+def test_non_string_link_value_drops_the_archive(spark, tmp_path):
+    """A JSON number in a string field is read as its text, as the
+    jsonl reader reads it: the archive is not dropped, the good record
+    is kept, and the number becomes a relative url like any other."""
+    bad = _good()
+    _links(bad)[0]["url"] = 123
+    path = _gz_warc(tmp_path / "int.warc.gz", [_payload(FIXTURE_RECORDS[0]), _payload(bad)])
+    _links(bad)[0]["url"] = "123"  # what the parse reads, for the oracle
+    got = _extract(read_wat_archives(spark, [path]))
+    assert got == _oracle([FIXTURE_RECORDS[0], bad])
+    assert ("http://example.com/gallery/123", "A cat") in {(r[1], r[2]) for r in got}
 
-    bad = copy.deepcopy(FIXTURE_RECORDS[0])
-    meta = bad["Envelope"]["Payload-Metadata"]["HTTP-Response-Metadata"]
-    meta["HTML-Metadata"]["Links"][0]["url"] = 123
-    good = json.dumps(FIXTURE_RECORDS[0]).encode()
-    path = _gz_warc(tmp_path / "int.warc.gz", [good, json.dumps(bad).encode()])
-    assert list(iter_wat_batches(path)) == []
+
+@pytest.mark.parametrize("source", ["archives", "jsonl"])
+def test_record_without_container_filename_is_skipped(spark, tmp_path, source):
+    """The reference indexes Container.Filename, so it never emits a
+    link without it: a record with a null Filename or no Container is
+    skipped by both readers, and its neighbours are kept."""
+    null_filename = _good()
+    null_filename["Container"]["Filename"] = None
+    no_container = _good()
+    del no_container["Container"]
+    payloads = [_payload(r) for r in (null_filename, FIXTURE_RECORDS[0], no_container)]
+    if source == "archives":
+        df = read_wat_archives(spark, [_gz_warc(tmp_path / "f.warc.gz", payloads)])
+    else:
+        jsonl = tmp_path / "f.jsonl"
+        jsonl.write_bytes(b"\n".join(payloads) + b"\n")
+        df = read_wat_jsonl(spark, str(jsonl))
+    assert df.count() == 3
+    assert _extract(df, "image_only") == _oracle([FIXTURE_RECORDS[0]], "image_only")
 
 
 def test_read_wat_archives_of_no_paths_is_empty(spark):
@@ -331,7 +383,7 @@ def test_warc_iter_retries_flaky_io(monkeypatch):
     sleeps: list[float] = []
     monkeypatch.setattr(time, "sleep", sleeps.append)
     calls = _fsspec_failing_first(2, monkeypatch)
-    assert _rows(iter_wat_batches(FIXTURE_PATH)) == len(_GUARDED)
+    assert _rows(iter_wat_batches(FIXTURE_PATH)) == _FIXTURE_PAYLOADS
     assert len(calls) == 3 and len(sleeps) == 2  # two failures + one success
 
     calls = _fsspec_failing_first(10, monkeypatch)
@@ -374,7 +426,7 @@ def test_archive_reader_runs_where_the_package_is_not_importable(tmp_path):
         capture_output=True, cwd=tmp_path, env=env, timeout=120,
     )
     assert out.returncode == 0, out.stderr.decode()
-    assert int(out.stdout) == len(_GUARDED)
+    assert int(out.stdout) == _FIXTURE_PAYLOADS
 
 
 def test_http_scrape_discovery_rewrite_offline():

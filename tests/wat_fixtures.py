@@ -116,7 +116,8 @@ def oracle_extract(records: list[dict], document_type: str) -> list[tuple]:
         meta = env["Payload-Metadata"]["HTTP-Response-Metadata"]["HTML-Metadata"]
         links = meta["Links"]
         page_url = env["WARC-Header-Metadata"]["WARC-Target-URI"]
-        if links is None or page_url is None:
+        cc_filename = rec["Container"]["Filename"]
+        if links is None or page_url is None or cc_filename is None:
             continue
         base_url = page_url
         if meta["Head"]["Base"] is not None:
@@ -124,7 +125,6 @@ def oracle_extract(records: list[dict], document_type: str) -> list[tuple]:
                 base_url = urljoin(base_url, meta["Head"]["Base"])
             except ValueError:
                 pass
-        cc_filename = rec["Container"]["Filename"]
         for ln in links:
             url = ln["url"] or ""
             if document_type == "image":
