@@ -1,4 +1,4 @@
-.PHONY: test test-full bench bench-wat bench-wat-trace verify plans lint loc
+.PHONY: test test-full test-pipeline bench bench-wat bench-wat-trace verify plans lint loc
 
 test:
 	python -m pytest tests/ -q
@@ -6,6 +6,10 @@ test:
 # every tier, the slow codec/property suites included
 test-full:
 	python -m pytest tests/ -q -m "slow or not slow"
+
+# every tier of the suites that read WAT archives through the pipeline
+test-pipeline:
+	python -m pytest tests/test_warc_source.py tests/test_pipeline.py tests/test_extraction.py tests/test_files_cli.py -q -m "slow or not slow"
 
 bench:
 	python bench.py

@@ -33,13 +33,6 @@ def _build_parser() -> argparse.ArgumentParser:
     pipe.add_argument("--master", default=None)
     pipe.add_argument("--num-cores", type=int, default=None)
     pipe.add_argument("--mem-gb", type=int, default=None)
-    pipe.add_argument(
-        "--source",
-        default="warc",
-        choices=["warc", "jsonl"],
-        help="ingestion path: WARC archive reader (warc) or the "
-        "schema-on-read jsonl twin",
-    )
 
     q = sub.add_parser("query", help="run one catalog query and show it")
     q.add_argument("name")
@@ -152,11 +145,6 @@ def main(argv: list[str] | None = None) -> int:
         spark = build_spark_session(
             master=args.master, num_cores=args.num_cores, mem_gb=args.mem_gb
         )
-        source = None
-        if args.source == "jsonl":
-            from cc2dataset_spark.sources.wat import read_wat_jsonl
-
-            source = read_wat_jsonl
         n = cc2dataset(
             spark,
             args.output_path,
@@ -165,7 +153,6 @@ def main(argv: list[str] | None = None) -> int:
             multipart=args.multipart,
             shuffle=not args.no_shuffle,
             resume=args.resume,
-            source=source,
         )
         print(f"rows written: {n}")
         return 0

@@ -98,10 +98,9 @@ def job_id(now: datetime | None = None) -> str:
 # hdfs://, local). The reference does the same (main.py:290-296,
 # 376-380); plain os.* here would silently write the manifest to a
 # literal "s3a:" directory on the driver's local disk and resume would
-# never see _SUCCESS markers. The names below stay as thin aliases —
+# never see _SUCCESS markers. The two names below are thin aliases —
 # fsio.py is the single implementation (the sinks route through it
 # too).
-from cc2dataset_spark.fsio import _LocalFS  # noqa: F401 (re-export)
 from cc2dataset_spark.fsio import fs_for as _fs_for
 from cc2dataset_spark.fsio import join as _join
 
@@ -182,15 +181,9 @@ def process_part(
     shuffle: bool = True,
     seed: int = 42,
     min_files: int = DEFAULT_MIN_FILES,
-    source=None,
 ) -> int:
-    """X1 — one part: archives -> extraction -> dedup -> write.
-
-    ``source`` ((spark, paths) -> DataFrame[WAT_SCHEMA], default the
-    WARC archive reader ``read_wat_archives``) selects the ingestion
-    path; ``read_wat_jsonl`` is the hermetic twin."""
-    read = source if source is not None else read_wat_archives
-    wat_df = read(spark, wat_paths)
+    """X1 — one part: archives -> extraction -> dedup -> write."""
+    wat_df = read_wat_archives(spark, wat_paths)
     extracted = extract_document_links(wat_df, document_type)
     return deduplicate_repartition_write(
         extracted,
@@ -235,7 +228,6 @@ def cc2dataset(
     seed: int = 42,
     min_files: int = DEFAULT_MIN_FILES,
     session_factory=None,
-    source=None,
 ) -> int:
     """Full pipeline (X1-X5, main.py:336-387): job-namespaced output,
     manifest, optional multipart with resume, final merge. Returns the
@@ -294,7 +286,6 @@ def cc2dataset(
             shuffle,
             seed,
             min_files,
-            source=source,
         )
         _write_manifest(manifest, wat_paths)
         return n
@@ -341,7 +332,6 @@ def cc2dataset(
             shuffle,
             seed,
             min_files,
-            source=source,
         )
     spark = next_session(spark)
     part_paths = [

@@ -38,29 +38,19 @@ def make_warc_record_iterator():
     """Build the by-value-picklable record iterator (see module doc)."""
 
     def iter_warc_records(raw):
-        """Yield ``(warc_type, headers, payload_bytes)`` from a binary
-        file-like of WARC bytes (gzipped — possibly multi-member — or
-        plain; auto-detected by magic)."""
+        """Yield ``(warc_type, headers, payload_bytes)`` from a
+        seekable binary file-like of WARC bytes (gzipped — possibly
+        multi-member — or plain; auto-detected by magic)."""
         import gzip
-        import io
 
         # peek the 2 magic bytes and REWIND rather than re-reading the
         # whole stream into a fresh bytes object: the caller already
         # holds the full ~1 GB archive in a BytesIO, and head + rest
         # concatenation would materialize a second full copy per task
         # (~2x peak memory on the no-fastwarc path) for nothing
-        if hasattr(raw, "seekable") and raw.seekable():
-            head = raw.read(2)
-            raw.seek(0)
-            src = raw
-        else:  # non-seekable stream: materialize once (no choice)
-            data = raw.read()
-            head = data[:2]
-            src = io.BytesIO(data)
-        if head == b"\x1f\x8b":
-            stream = gzip.GzipFile(fileobj=src)
-        else:
-            stream = src
+        head = raw.read(2)
+        raw.seek(0)
+        stream = gzip.GzipFile(fileobj=raw) if head == b"\x1f\x8b" else raw
 
         def read_line() -> bytes:
             return stream.readline()

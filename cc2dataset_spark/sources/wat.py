@@ -1,25 +1,18 @@
 """WAT/WARC sources (SURVEY.md §2.1 S1-S10).
 
-Two ingestion paths, one JSON decoder:
-
-1. ``read_wat_archives`` — real gzipped WARC archives, the default.
-   Python frames, Spark parses. WARC framing has no Spark primitive
-   for ``https://`` archives, so a ``mapInArrow`` over the paths (one
-   Spark partition per WAT path exactly like the reference's
-   ``sc.parallelize(paths, len(paths))`` at main.py:274) opens, retries
-   and frames each archive, and hands Spark its raw metadata payloads
-   as ``value: binary`` Arrow batches. Spark parses them with
-   ``from_json`` and ``WAT_SCHEMA``. The per-archive function ships by
-   value, so executors need only pyspark; fastwarc and fsspec are used
-   when installed.
-2. ``read_wat_jsonl`` — the hermetic twin: JSON-lines of WAT envelopes
-   read with ``spark.read.text``, one payload per line.
-
-Both end in :func:`_parse_wat_payloads`, so they return the same rows
-for the same payloads: one per record, schema-on-read with no
+One ingestion path, ``read_wat_archives``: real gzipped WARC archives.
+Python frames, Spark parses. WARC framing has no Spark primitive for
+``https://`` archives, so a ``mapInArrow`` over the paths (one Spark
+partition per WAT path exactly like the reference's
+``sc.parallelize(paths, len(paths))`` at main.py:274) opens, retries
+and frames each archive, and hands Spark its raw metadata payloads as
+``value: binary`` Arrow batches. Spark parses them with ``from_json``
+and ``WAT_SCHEMA``: one row per record, schema-on-read with no
 inference, a malformed payload as an all-null row. The envelope guards
 of ``operators/extraction.py`` drop that row, mirroring the reference's
-skip-and-log at main.py:139-143.
+skip-and-log at main.py:139-143. The per-archive function ships by
+value, so executors need only pyspark; fastwarc and fsspec are used
+when installed.
 
 Index discovery (S1-S5) lists crawl indexes and samples WAT paths;
 network listing is driver-side (it is a metadata operation), the
@@ -105,40 +98,6 @@ WAT_SCHEMA = StructType(
     ]
 )
 
-# Output schema of extraction — explicit, never inferred
-# (reference infers via toDF at main.py:285; column order pinned by
-# tests/test_single_warc.py:19).
-EXTRACT_SCHEMA = StructType(
-    [
-        StructField("uid", StringType()),
-        StructField("url", StringType()),
-        StructField("alt", StringType()),
-        StructField("cc_filename", StringType()),
-        StructField("page_url", StringType()),
-    ]
-)
-
-
-def _parse_wat_payloads(payloads: DataFrame) -> DataFrame:
-    """One WAT JSON payload per row (a ``value`` column, string or
-    binary) -> DataFrame[WAT_SCHEMA], one row per payload: the decoder
-    of both readers.
-
-    Binary is cast to string unvalidated and Jackson reads it as UTF-8,
-    so a non-UTF-8 byte becomes U+FFFD; a malformed payload becomes an
-    all-null row. ``inline(array(from_json(...)))`` is a ``Generate``,
-    so the parse runs once per record: ``select(from_json(...)
-    .alias("r")).select("r.*")`` would let the optimizer copy the parse
-    into the envelope guards' ``Filter`` and run it three times.
-    """
-    parsed = F.from_json(F.col("value").cast("string"), WAT_SCHEMA)
-    return payloads.select(F.inline(F.array(parsed)))
-
-
-def read_wat_jsonl(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """WAT envelopes as JSON lines with schema-on-read, one row per line."""
-    return _parse_wat_payloads(spark.read.text(path))
-
 
 # ---------------------------------------------------------------------------
 # Index discovery (S1-S5) — driver-side listing + distributed index read
@@ -191,7 +150,7 @@ def get_cc_wat_index_links(
     ``url_to_fs`` injects the filesystem resolver (default
     ``fsspec.core.url_to_fs``) so the glob/link-building logic is
     unit-testable without fsspec installed — the same hermetic
-    injection seam as pipeline's ``source``/``session_factory``.
+    injection seam as pipeline's ``session_factory``.
     Scheme reattachment goes through ``fs.unstrip_protocol``, which
     yields exactly the reference's ``"s3://" + path`` form on s3 and
     stays correct for any other filesystem.
@@ -360,7 +319,8 @@ def make_wat_batch_reader():
     Containment: the whole-file read is retried 10 times with jitter
     and the archive is then skipped (the reference's file tier,
     main.py:190-200); a WARC framing error ends the archive, keeping
-    every payload framed before it."""
+    every payload framed before it. Each prints one line to the task's
+    stderr, so a lost archive leaves a trace in the executor log."""
     import pyarrow as pa
 
     from cc2dataset_spark.sources.warc_fallback import iter_warc_records
@@ -369,8 +329,15 @@ def make_wat_batch_reader():
 
     def iter_wat_batches(path: str) -> Iterator[pa.RecordBatch]:
         import random as _random
+        import sys as _sys
         import time as _time
         from io import BytesIO
+
+        def _trace(what: str, ex: Exception) -> None:
+            print(
+                f"cc2dataset_spark: {what}: {type(ex).__name__}: {ex}",
+                file=_sys.stderr,
+            )
 
         def _open(p: str):
             try:
@@ -418,19 +385,22 @@ def make_wat_batch_reader():
                 break
             except NotImplementedError:
                 raise  # missing fsspec: deterministic, never retried
-            except Exception:  # noqa: BLE001 - flaky remote IO
+            except Exception as ex:  # noqa: BLE001 - flaky remote IO
                 if i == attempts - 1:
+                    _trace(f"skipped {path} after {attempts} failed reads", ex)
                     return
                 _time.sleep(1 + _random.random())
         values: list[bytes] = []
+        n = 0
         try:
             for payload in _payloads(stream):
                 values.append(payload)
+                n += 1
                 if len(values) == BATCH_RECORDS:
                     yield pa.record_batch([pa.array(values, pa.binary())], schema)
                     values = []
-        except Exception:  # noqa: BLE001 - framing error: the archive ends here
-            pass
+        except Exception as ex:  # noqa: BLE001 - framing error: the archive ends here
+            _trace(f"{path} ends after {n} payloads", ex)
         if values:
             yield pa.record_batch([pa.array(values, pa.binary())], schema)
 
@@ -442,8 +412,7 @@ iter_wat_batches = make_wat_batch_reader()
 
 def read_wat_archives(spark: SparkSession, wat_paths: list[str]) -> DataFrame:
     """WAT archives -> DataFrame[WAT_SCHEMA], one row per metadata
-    record: exactly the rows :func:`read_wat_jsonl` returns for a file
-    of the same payloads.
+    record, in archive order.
 
     One Spark partition per WAT path so a 100 TB crawl parallelizes to
     one task per ~1 GB archive with no skew (reference main.py:273-274).
@@ -452,8 +421,8 @@ def read_wat_archives(spark: SparkSession, wat_paths: list[str]) -> DataFrame:
     it the way ``createDataFrame`` does a local list. No Python worker
     feeds the paths, and the function shipped to every task is the same
     few kilobytes whatever the path count. Each task runs
-    :func:`iter_wat_batches` on its path in a ``mapInArrow``, and
-    :func:`_parse_wat_payloads` parses the payloads in Spark.
+    :func:`iter_wat_batches` on its path in a ``mapInArrow``, and Spark
+    parses the payloads.
     """
     sc = spark.sparkContext
     jvm = sc._jvm
@@ -472,4 +441,13 @@ def read_wat_archives(spark: SparkSession, wat_paths: list[str]) -> DataFrame:
 
     # binary, not string: one non-UTF-8 payload would fail its whole
     # batch's Arrow string array
-    return _parse_wat_payloads(paths.mapInArrow(archives, "value binary"))
+    payloads = paths.mapInArrow(archives, "value binary")
+    # Binary is cast to string unvalidated and Jackson reads it as
+    # UTF-8, so a non-UTF-8 byte becomes U+FFFD; a malformed payload
+    # becomes an all-null row. ``inline(array(from_json(...)))`` is a
+    # ``Generate``, so the parse runs once per record:
+    # ``select(from_json(...).alias("r")).select("r.*")`` would let the
+    # optimizer copy the parse into the envelope guards' ``Filter`` and
+    # run it three times.
+    parsed = F.from_json(F.col("value").cast("string"), WAT_SCHEMA)
+    return payloads.select(F.inline(F.array(parsed)))

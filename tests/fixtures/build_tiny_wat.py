@@ -3,8 +3,8 @@
 A real (if small) gzipped WARC whose ``metadata`` records carry the
 same WAT JSON envelopes as tests/wat_fixtures.FIXTURE_RECORDS — so the
 archive reader (sources/wat.read_wat_archives) can be tested
-against the exact same pure-Python oracle as the jsonl twin, golden-
-count style like the reference's tests/test_single_warc.py:22-54.
+against the pure-Python oracle of tests/wat_fixtures, golden-count
+style like the reference's tests/test_single_warc.py:22-54.
 
 Extra records exercise the containment tiers:
 - a ``warcinfo`` record (must be ignored: record_types=metadata),

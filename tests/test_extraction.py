@@ -1,8 +1,9 @@
 """Hermetic golden tests of the layer-A extraction operator: the Spark
 plan must reproduce the pure-Python oracle's 5-tuples exactly (uids are
-md5 of resolved urls, so urljoin parity is covered byte-for-byte)."""
+md5 of resolved urls, so urljoin parity is covered byte-for-byte). The
+operator runs over in-memory rows of the fixture records, and over WAT
+archives read by ``read_wat_archives`` where the source matters."""
 
-import json
 import os
 import re
 import subprocess
@@ -18,9 +19,9 @@ from cc2dataset_spark.functions.links import (
     urljoin_udf,
 )
 from cc2dataset_spark.operators.extraction import extract_document_links
-from cc2dataset_spark.sources.wat import WAT_SCHEMA, read_wat_archives, read_wat_jsonl
+from cc2dataset_spark.sources.wat import WAT_SCHEMA, read_wat_archives
 from tests.fixtures.build_tiny_wat import FIXTURE_PATH
-from tests.wat_fixtures import FIXTURE_RECORDS, oracle_extract
+from tests.wat_fixtures import FIXTURE_RECORDS, oracle_extract, payload, write_wat_archive
 
 DOCUMENT_TYPES = ("image", "image_only", "audio", "text", "video")
 
@@ -44,25 +45,9 @@ def test_unknown_document_type_raises(spark, wat_df):
         extract_document_links(wat_df, "bogus")
 
 
-def _write_jsonl(path, records):
-    with open(path, "w", encoding="utf8") as f:
-        for rec in records:
-            f.write(json.dumps(rec) + "\n")
-
-
-def test_jsonl_roundtrip(spark, tmp_path, wat_df):
-    """JSON-lines source with schema-on-read gives the same extraction."""
-    p = tmp_path / "wat.jsonl"
-    _write_jsonl(p, FIXTURE_RECORDS)
-    df = read_wat_jsonl(spark, str(p))
-    got = sorted(tuple(r) for r in extract_document_links(df, "image").collect())
-    want = sorted(oracle_extract(FIXTURE_RECORDS, "image"))
-    assert got == want
-
-
 # Plan-node patterns: Spark's source scans print as "Scan ExistingRDD"
-# (the archive reader's path feed, under its one MapInArrow), "FileScan
-# text" and "BatchScan"; the Python boundary prints as ArrowEvalPython
+# (the archive reader's path feed, under its one MapInArrow), "FileScan"
+# and "BatchScan"; the Python boundary prints as ArrowEvalPython
 # or BatchEvalPython.
 _SCAN = re.compile(r"\b(File|Batch)?Scan\b")
 _PY_EVAL = re.compile(r"(Arrow|Batch)EvalPython")
@@ -72,24 +57,16 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.mark.parametrize("source", ["archives", "jsonl"])
-def test_extraction_plan_scans_once_and_crosses_python_once(spark, tmp_path, source):
+def test_extraction_plan_scans_once_and_crosses_python_once(spark):
     """Each WAT is decoded once and each link crosses into Python once:
     the executed plan has one source scan, one JSON parse and one Python
     evaluation. (A ``select("r.*")`` over the parsed struct would copy
     the parse into the guard Filter: three ``from_json``.)"""
-    if source == "archives":
-        wat = read_wat_archives(spark, [FIXTURE_PATH])
-    else:
-        p = tmp_path / "wat.jsonl"
-        _write_jsonl(p, FIXTURE_RECORDS)
-        wat = read_wat_jsonl(spark, str(p))
-    df = extract_document_links(wat, "image")
+    df = extract_document_links(read_wat_archives(spark, [FIXTURE_PATH]), "image")
     lines = _plan(df).splitlines()
     assert sum(1 for l in lines if _SCAN.search(l)) == 1
     assert _plan(df).count("from_json(") == 1
-    if source == "archives":
-        assert sum(1 for l in lines if "MapInArrow" in l) == 1
+    assert sum(1 for l in lines if "MapInArrow" in l) == 1
     assert sum(1 for l in lines if _PY_EVAL.search(l)) == 1
     got = sorted(tuple(r) for r in df.collect())
     assert got == sorted(oracle_extract(FIXTURE_RECORDS, "image"))
@@ -186,14 +163,11 @@ def test_dedup_collapses_duplicate_uid(spark, wat_df):
 
 
 def test_malformed_json_rows_are_skipped(spark, tmp_path):
-    """Malformed JSON lines null out under schema-on-read and fall to
+    """Malformed JSON payloads null out under schema-on-read and fall to
     the envelope guards — the skip-and-log tier at main.py:139-143."""
-    p = tmp_path / "bad.jsonl"
-    with open(p, "w", encoding="utf8") as f:
-        f.write(json.dumps(FIXTURE_RECORDS[0]) + "\n")
-        f.write("{not valid json!!\n")
-        f.write(json.dumps(FIXTURE_RECORDS[1]) + "\n")
-    df = read_wat_jsonl(spark, str(p))
+    good = [payload(r) for r in FIXTURE_RECORDS[:2]]
+    payloads = [good[0], b"{not valid json!!", good[1]]
+    df = read_wat_archives(spark, [write_wat_archive(tmp_path / "bad.warc.gz", payloads)])
     got = sorted(tuple(r) for r in extract_document_links(df, "image").collect())
     want = sorted(oracle_extract([FIXTURE_RECORDS[0], FIXTURE_RECORDS[1]], "image"))
     assert got == want

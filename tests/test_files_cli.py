@@ -32,19 +32,10 @@ def test_cli_list_queries(capsys):
 
 def test_pipeline_session_restart(spark, tmp_path, monkeypatch):
     """session_factory is invoked per part + once for the merge."""
-    import json as _json
-
     from cc2dataset_spark import pipeline
-    from cc2dataset_spark.sources.wat import read_wat_jsonl
-    from tests.wat_fixtures import FIXTURE_RECORDS
+    from tests.wat_fixtures import FIXTURE_RECORDS, payload, write_wat_archive
 
-    p = tmp_path / "w.jsonl"
-    with open(p, "w", encoding="utf8") as f:
-        for rec in FIXTURE_RECORDS:
-            f.write(_json.dumps(rec) + "\n")
-    monkeypatch.setattr(
-        pipeline, "read_wat_archives", lambda s, paths: read_wat_jsonl(s, paths)
-    )
+    p = write_wat_archive(tmp_path / "w.warc.wat.gz", map(payload, FIXTURE_RECORDS))
     calls = []
 
     def factory():
@@ -57,7 +48,7 @@ def test_pipeline_session_restart(spark, tmp_path, monkeypatch):
     n = pipeline.cc2dataset(
         spark,
         str(tmp_path / "out"),
-        [str(p), str(p)],
+        [p, p],
         multipart=2,
         min_files=2,
         session_factory=factory,
@@ -66,19 +57,13 @@ def test_pipeline_session_restart(spark, tmp_path, monkeypatch):
     assert len(calls) == 3  # part_0, part_1, merge
 
 
-def test_cli_pipeline_source_flag(spark, tmp_path, monkeypatch):
-    """`pipeline --source jsonl` runs the whole CLI path end-to-end on
-    the hermetic jsonl twin (session builder patched to the test
-    session)."""
-    import json as _json
-
+def test_cli_pipeline_on_archive(spark, tmp_path, monkeypatch):
+    """`pipeline` runs the whole CLI path end-to-end on a WAT archive
+    (session builder patched to the test session)."""
     import cc2dataset_spark.__main__ as cli
-    from tests.wat_fixtures import FIXTURE_RECORDS, oracle_extract
+    from tests.wat_fixtures import FIXTURE_RECORDS, oracle_extract, payload, write_wat_archive
 
-    p = tmp_path / "w.jsonl"
-    with open(p, "w", encoding="utf8") as f:
-        for rec in FIXTURE_RECORDS:
-            f.write(_json.dumps(rec) + "\n")
+    p = write_wat_archive(tmp_path / "w.warc.wat.gz", map(payload, FIXTURE_RECORDS))
     import cc2dataset_spark.session as session_mod
 
     monkeypatch.setattr(
@@ -90,9 +75,7 @@ def test_cli_pipeline_source_flag(spark, tmp_path, monkeypatch):
             "--output-path",
             str(tmp_path / "out"),
             "--wat-paths",
-            str(p),
-            "--source",
-            "jsonl",
+            p,
         ]
     )
     assert rc == 0

@@ -1,10 +1,10 @@
 """Hermetic pipeline tests (X1-X5): dedup/write block, multipart merge,
 resume, and the invariants implied by the reference
 (/root/reference/cc2dataset/main.py:254-329): dedup idempotence and
-multipart-merge == single-part on the same input."""
+multipart-merge == single-part on the same input. Every test reads real
+WAT archives through the production reader, ``read_wat_archives``."""
 
 import importlib.util
-import json
 import os
 import subprocess
 import sys
@@ -16,33 +16,19 @@ from pyspark.sql.readwriter import DataFrameReader
 
 from cc2dataset_spark import pipeline
 from cc2dataset_spark.operators.extraction import extract_document_links
-from cc2dataset_spark.sources.wat import read_wat_jsonl
-from tests.wat_fixtures import FIXTURE_RECORDS, oracle_extract
+from cc2dataset_spark.sources.wat import read_wat_archives
+from tests.wat_fixtures import FIXTURE_RECORDS, oracle_extract, payload, write_wat_archive
 
 
 @pytest.fixture(scope="module")
-def wat_jsonl(tmp_path_factory):
-    """Two jsonl 'archives' standing in for WAT files."""
+def wat_archives(tmp_path_factory):
+    """Two gzipped WAT archives holding the fixture records between
+    them."""
     d = tmp_path_factory.mktemp("wats")
-    paths = []
-    for i, chunk in enumerate([FIXTURE_RECORDS[:3], FIXTURE_RECORDS[3:]]):
-        p = d / f"wat_{i}.jsonl"
-        with open(p, "w", encoding="utf8") as f:
-            for rec in chunk:
-                f.write(json.dumps(rec) + "\n")
-        paths.append(str(p))
-    return paths
-
-
-@pytest.fixture(autouse=True)
-def _jsonl_archive_source(monkeypatch):
-    """Swap the archive source for its jsonl twin, which parses the same
-    payloads the same way, so the orchestration tests need no archives."""
-    monkeypatch.setattr(
-        pipeline,
-        "read_wat_archives",
-        lambda spark, paths: read_wat_jsonl(spark, paths),
-    )
+    return [
+        write_wat_archive(d / f"wat_{i}.warc.wat.gz", [payload(r) for r in chunk])
+        for i, chunk in enumerate([FIXTURE_RECORDS[:3], FIXTURE_RECORDS[3:]])
+    ]
 
 
 def _expected_unique_uids(document_type="image"):
@@ -78,16 +64,14 @@ def no_read_back(monkeypatch):
     monkeypatch.setattr(DataFrameReader, "parquet", refuse)
 
 
-def test_pipeline_on_real_warc_archive(spark, tmp_path, monkeypatch):
+def test_pipeline_on_real_warc_archive(spark, tmp_path):
     """End-to-end on the REAL gzipped WARC fixture — the archive path
     (stdlib parser here; fastwarc where installed) feeding the full
     extract -> dedup -> write -> count pipeline, matching the
     reference's single-WAT golden test shape
     (/root/reference/tests/test_single_warc.py:22-54)."""
-    from cc2dataset_spark.sources.wat import read_wat_archives
     from tests.fixtures.build_tiny_wat import FIXTURE_PATH
 
-    monkeypatch.setattr(pipeline, "read_wat_archives", read_wat_archives)
     out = str(tmp_path / "warc_out")
     n = pipeline.cc2dataset(
         spark, out, [FIXTURE_PATH], document_type="image", min_files=1
@@ -100,10 +84,10 @@ def test_pipeline_on_real_warc_archive(spark, tmp_path, monkeypatch):
     )
 
 
-def test_single_part_pipeline(spark, tmp_path, wat_jsonl):
+def test_single_part_pipeline(spark, tmp_path, wat_archives):
     out = str(tmp_path / "out")
     n = pipeline.cc2dataset(
-        spark, out, wat_jsonl, document_type="image", min_files=4
+        spark, out, wat_archives, document_type="image", min_files=4
     )
     assert n == len(_expected_unique_uids())
     job_dirs = os.listdir(out)
@@ -115,12 +99,12 @@ def test_single_part_pipeline(spark, tmp_path, wat_jsonl):
     assert {r.uid for r in written.select("uid").collect()} == _expected_unique_uids()
 
 
-def test_multipart_equals_single_part(spark, tmp_path, wat_jsonl):
+def test_multipart_equals_single_part(spark, tmp_path, wat_archives):
     single = str(tmp_path / "single")
     multi = str(tmp_path / "multi")
-    n1 = pipeline.cc2dataset(spark, single, wat_jsonl, document_type="image", min_files=2)
+    n1 = pipeline.cc2dataset(spark, single, wat_archives, document_type="image", min_files=2)
     n2 = pipeline.cc2dataset(
-        spark, multi, wat_jsonl, document_type="image", multipart=2, min_files=2
+        spark, multi, wat_archives, document_type="image", multipart=2, min_files=2
     )
     assert n1 == n2 == len(_expected_unique_uids())
     job = os.path.join(multi, os.listdir(multi)[0])
@@ -128,9 +112,9 @@ def test_multipart_equals_single_part(spark, tmp_path, wat_jsonl):
     assert {r.uid for r in merged.select("uid").collect()} == _expected_unique_uids()
 
 
-def test_resume_skips_completed_parts(spark, tmp_path, wat_jsonl, monkeypatch):
+def test_resume_skips_completed_parts(spark, tmp_path, wat_archives, monkeypatch):
     out = str(tmp_path / "resume")
-    pipeline.cc2dataset(spark, out, wat_jsonl, document_type="image", multipart=2, min_files=2)
+    pipeline.cc2dataset(spark, out, wat_archives, document_type="image", multipart=2, min_files=2)
     job = os.path.join(out, os.listdir(out)[0])
     assert pipeline.last_successful_part(job) == 1
 
@@ -143,19 +127,19 @@ def test_resume_skips_completed_parts(spark, tmp_path, wat_jsonl, monkeypatch):
 
     monkeypatch.setattr(pipeline, "process_part", counting)
     n = pipeline.cc2dataset(
-        spark, out, wat_jsonl, document_type="image", multipart=2, resume=job, min_files=2
+        spark, out, wat_archives, document_type="image", multipart=2, resume=job, min_files=2
     )
     assert calls == []  # both parts had _SUCCESS; only the merge re-ran
     assert n == len(_expected_unique_uids())
 
 
-def test_resume_requires_multipart(spark, tmp_path, wat_jsonl):
+def test_resume_requires_multipart(spark, tmp_path, wat_archives):
     with pytest.raises(ValueError, match="resume requires multipart"):
-        pipeline.cc2dataset(spark, str(tmp_path), wat_jsonl, resume="x")
+        pipeline.cc2dataset(spark, str(tmp_path), wat_archives, resume="x")
 
 
-def test_dedup_idempotent(spark, wat_jsonl):
-    df = extract_document_links(read_wat_jsonl(spark, wat_jsonl), "image_only")
+def test_dedup_idempotent(spark, wat_archives):
+    df = extract_document_links(read_wat_archives(spark, wat_archives), "image_only")
     once = df.dropDuplicates(["uid"])
     assert once.count() == once.dropDuplicates(["uid"]).count()
 
@@ -165,7 +149,7 @@ def test_output_file_count_floor():
     assert pipeline.output_file_count(500 * 300) == 300
 
 
-def test_shuffle_scatter_is_deterministic(spark, tmp_path, wat_jsonl):
+def test_shuffle_scatter_is_deterministic(spark, tmp_path, wat_archives):
     """The decorrelating scatter key must be a deterministic function
     of the row (xxhash64(uid, seed)), NEVER rand(): hash-partitioning
     on a nondeterministic expression is the SPARK-23207 class — a
@@ -173,7 +157,7 @@ def test_shuffle_scatter_is_deterministic(spark, tmp_path, wat_jsonl):
     rows silently duplicate or vanish under real-cluster stage
     retries. Locally observable proxy: two runs over the same input
     place every row in the same output file."""
-    wat_df = read_wat_jsonl(spark, wat_jsonl)
+    wat_df = read_wat_archives(spark, wat_archives)
     extracted = extract_document_links(wat_df, "image")
 
     def placement(out):
@@ -204,12 +188,12 @@ def test_shuffle_scatter_is_deterministic(spark, tmp_path, wat_jsonl):
     assert "rand(" not in plan
 
 
-def test_written_files_are_zstd(spark, tmp_path, wat_jsonl):
+def test_written_files_are_zstd(spark, tmp_path, wat_archives):
     """process_part and merge_parts both write every column chunk of
     every data file with zstd."""
     part = str(tmp_path / "part")
     merged = str(tmp_path / "merged")
-    n = pipeline.process_part(spark, wat_jsonl, part, "image", min_files=4)
+    n = pipeline.process_part(spark, wat_archives, part, "image", min_files=4)
     m = pipeline.merge_parts(spark, [part], merged, wat_count=2, min_files=4)
     assert n == m == len(_expected_unique_uids())
     for path in (part, merged):
@@ -219,11 +203,11 @@ def test_written_files_are_zstd(spark, tmp_path, wat_jsonl):
 
 @pytest.mark.parametrize("shuffle", [True, False])
 def test_write_counts_rows_without_reading_back(
-    spark, tmp_path, wat_jsonl, no_read_back, shuffle
+    spark, tmp_path, wat_archives, no_read_back, shuffle
 ):
     """The returned count comes from the write pass itself: no parquet
     read during the call, and it equals the rows on disk."""
-    extracted = extract_document_links(read_wat_jsonl(spark, wat_jsonl), "image")
+    extracted = extract_document_links(read_wat_archives(spark, wat_archives), "image")
     out = str(tmp_path / "out")
     n = pipeline.deduplicate_repartition_write(
         extracted, out, wat_count=2, shuffle=shuffle, min_files=4
@@ -235,9 +219,9 @@ def test_write_counts_rows_without_reading_back(
 
 
 def test_write_of_empty_input_returns_zero(
-    spark, tmp_path, wat_jsonl, no_read_back
+    spark, tmp_path, wat_archives, no_read_back
 ):
-    extracted = extract_document_links(read_wat_jsonl(spark, wat_jsonl), "image")
+    extracted = extract_document_links(read_wat_archives(spark, wat_archives), "image")
     out = str(tmp_path / "empty")
     n = pipeline.deduplicate_repartition_write(
         extracted.where(F.lit(False)), out, wat_count=2, min_files=4
@@ -248,11 +232,11 @@ def test_write_of_empty_input_returns_zero(
     assert table.column_names == extracted.columns
 
 
-def test_parquet_bytes_tool(spark, tmp_path, wat_jsonl):
+def test_parquet_bytes_tool(spark, tmp_path, wat_archives):
     """tools/parquet_bytes.py accounts for every byte of a written
     dataset: per-column plus non-column bytes add up to the files."""
     out = str(tmp_path / "out")
-    n = pipeline.process_part(spark, wat_jsonl, out, "image", min_files=4)
+    n = pipeline.process_part(spark, wat_archives, out, "image", min_files=4)
     tool = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "tools",
@@ -279,7 +263,7 @@ def test_parquet_bytes_tool(spark, tmp_path, wat_jsonl):
     assert "  uid " in printed and "(non-column)" in printed
 
 
-def test_resume_rejects_changed_multipart(spark, tmp_path, wat_jsonl):
+def test_resume_rejects_changed_multipart(spark, tmp_path, wat_archives):
     """r8 regression: chunk boundaries derive from multipart while the
     resume point derives from _SUCCESS markers — resuming a job with a
     DIFFERENT multipart would silently skip/duplicate WAT ranges, so
@@ -287,18 +271,18 @@ def test_resume_rejects_changed_multipart(spark, tmp_path, wat_jsonl):
     value)."""
     out = str(tmp_path / "resume_mp")
     pipeline.cc2dataset(
-        spark, out, wat_jsonl, document_type="image", multipart=2,
+        spark, out, wat_archives, document_type="image", multipart=2,
         min_files=2,
     )
     job = os.path.join(out, os.listdir(out)[0])
     with pytest.raises(ValueError, match="multipart=2"):
         pipeline.cc2dataset(
-            spark, out, wat_jsonl, document_type="image", multipart=3,
+            spark, out, wat_archives, document_type="image", multipart=3,
             resume=job, min_files=2,
         )
     # the recorded value still resumes
     n = pipeline.cc2dataset(
-        spark, out, wat_jsonl, document_type="image", multipart=2,
+        spark, out, wat_archives, document_type="image", multipart=2,
         resume=job, min_files=2,
     )
     assert n == len(_expected_unique_uids())
@@ -306,7 +290,7 @@ def test_resume_rejects_changed_multipart(spark, tmp_path, wat_jsonl):
 
 @pytest.mark.slow
 def test_multipart_streams_manifest_slices(
-    spark, tmp_path, wat_jsonl, monkeypatch
+    spark, tmp_path, wat_archives, monkeypatch
 ):
     """r9: the multipart loop must drive itself from per-part manifest
     slices — at full crawl the WAT index is ~5M paths, and holding the
@@ -315,7 +299,9 @@ def test_multipart_streams_manifest_slices(
     already be _SUCCESS-marked. Contract: every part's source call
     receives exactly its chunk of the manifest (order-preserving,
     covering, disjoint), and the full manifest is NEVER materialized
-    after the initial write — not on the first run, not on resume."""
+    after the initial write — not on the first run, not on resume. The
+    100,000 synthetic paths go to a recorder standing in for the reader,
+    which returns a read of the real archives."""
     out = str(tmp_path / "streamed")
     n_paths, mp = 100_000, 4
     fake = [f"synthetic/wat_{i:06d}.gz" for i in range(n_paths)]
@@ -323,8 +309,9 @@ def test_multipart_streams_manifest_slices(
 
     def recording_source(s, paths):
         calls.append((paths[0], paths[-1], len(paths)))
-        return read_wat_jsonl(s, wat_jsonl)
+        return read_wat_archives(s, wat_archives)
 
+    monkeypatch.setattr(pipeline, "read_wat_archives", recording_source)
     real_read = pipeline._read_manifest
 
     def guarded(path):
@@ -336,8 +323,7 @@ def test_multipart_streams_manifest_slices(
 
     monkeypatch.setattr(pipeline, "_read_manifest", guarded)
     n = pipeline.cc2dataset(
-        spark, out, fake, document_type="image", multipart=mp,
-        min_files=1, source=recording_source,
+        spark, out, fake, document_type="image", multipart=mp, min_files=1
     )
     assert n == len(_expected_unique_uids())
     chunk = (n_paths + mp - 1) // mp
@@ -355,7 +341,7 @@ def test_multipart_streams_manifest_slices(
     job = os.path.join(out, os.listdir(out)[0])
     n2 = pipeline.cc2dataset(
         spark, out, fake, document_type="image", multipart=mp,
-        resume=job, min_files=1, source=recording_source,
+        resume=job, min_files=1
     )
     assert n2 == n and calls == []
 

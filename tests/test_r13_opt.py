@@ -1,11 +1,13 @@
 """Focused regression tests for the r13 optimization-round changes:
-spread_small_scan's conditional behavior and the image_dims hex-twin
-refactor (2-int fold accumulator + pre-hexed variant)."""
+spread_small_scan's conditional behavior (and the ``ref=`` contract it
+shares with spread_small_input) and the image_dims hex-twin refactor
+(2-int fold accumulator + pre-hexed variant)."""
 
 import pyspark.sql.functions as F
 import pytest
 
 from cc2dataset_spark.operators import multimodal as MM
+from cc2dataset_spark.operators.partitioning import spread_small_input
 from cc2dataset_spark.sources.tables import spread_small_scan
 
 
@@ -26,6 +28,32 @@ def test_spread_small_scan_noop_when_already_parallel(spark):
     out = spread_small_scan(df, "id")
     # must return the input untouched — no exchange in the plan
     assert out is df
+
+
+def _repartitions(df) -> int:
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return sum(1 for line in plan.splitlines() if "Repartition" in line)
+
+
+@pytest.mark.parametrize("spread", [spread_small_input, spread_small_scan])
+def test_wrong_ref_never_changes_rows(spark, spread):
+    """``ref`` must be a narrow ancestor with ``df``'s partition count.
+    A wrong one (more or fewer partitions than ``df``) only mis-sizes
+    the decision: the result is ``df`` itself or ``df`` behind one extra
+    exchange, and its rows are the rows without ``ref``."""
+    target = spark.sparkContext.defaultParallelism
+    narrow = spark.range(0, 1000, 1, 2).withColumn("sq", F.col("id") * F.col("id"))
+    wide = narrow.repartition(target + 4, "id")
+    for df, ref, spreads in (
+        (narrow, spark.range(0, 10, 1, target + 4), False),
+        (wide, spark.range(0, 10, 1, 1), True),
+    ):
+        want = sorted(spread(df).collect())
+        out = spread(df, ref=ref)
+        assert (out is not df) == spreads
+        if spreads:
+            assert _repartitions(out) == _repartitions(df) + 1
+        assert sorted(out.collect()) == want == sorted(df.collect())
 
 
 def test_driver_union_find_labels_are_broadcast(spark):

@@ -4,10 +4,11 @@ per-archive function ``iter_wat_batches``).
 The checked-in tiny.wat.warc.gz fixture holds the SAME envelopes as
 tests/wat_fixtures.FIXTURE_RECORDS plus a warcinfo record and a
 malformed-JSON record, so the archive path is checked golden-count
-style against the same pure-Python oracle as the jsonl twin — the
-rebuild's hermetic version of the reference's pinned-WAT golden tests
-(reference tests/test_single_warc.py:22-54). The archive reader's rows
-are pinned to the jsonl reader's rows for the same payloads.
+style against the pure-Python oracle — the rebuild's hermetic version
+of the reference's pinned-WAT golden tests (reference
+tests/test_single_warc.py:22-54). Every other case writes its own
+archive with tests/wat_fixtures.write_wat_archive, and the reader's
+rows are pinned exactly for each payload edge.
 
 The archive path no longer gates on fastwarc: when it is absent (as
 in the build sandbox) the stdlib gzip-member parser
@@ -20,7 +21,6 @@ from __future__ import annotations
 
 import copy
 import io
-import json
 import os
 import subprocess
 import sys
@@ -36,11 +36,10 @@ from cc2dataset_spark.sources.wat import (
     WAT_SCHEMA,
     iter_wat_batches,
     read_wat_archives,
-    read_wat_jsonl,
 )
 from cc2dataset_spark.sources.warc_fallback import iter_warc_records
 from tests.fixtures.build_tiny_wat import FIXTURE_PATH, build_warc_bytes, build
-from tests.wat_fixtures import FIXTURE_RECORDS, oracle_extract
+from tests.wat_fixtures import FIXTURE_RECORDS, oracle_extract, payload, write_wat_archive
 
 # The fixture's metadata payloads: FIXTURE_RECORDS plus one malformed.
 _FIXTURE_PAYLOADS = len(FIXTURE_RECORDS) + 1
@@ -65,8 +64,8 @@ def test_fallback_parser_reads_fixture_records():
     assert types.count("warcinfo") == 1
     # FIXTURE_RECORDS metadata + 1 malformed-JSON metadata record
     assert types.count("metadata") == len(FIXTURE_RECORDS) + 1
-    for _, headers, payload in recs:
-        assert int(headers["Content-Length"]) == len(payload)
+    for _, headers, body in recs:
+        assert int(headers["Content-Length"]) == len(body)
         assert "WARC-Record-ID" in headers
 
 
@@ -106,37 +105,6 @@ def test_build_writes_fixture(tmp_path):
         assert f1.read() == f2.read()
 
 
-def _gz_warc(path, payloads, tail=b""):
-    """Write a gzipped WARC of metadata records with the given JSON
-    payload bytes (reusing the fixture builder's record writer),
-    followed by the raw bytes ``tail``."""
-    import gzip
-
-    from tests.fixtures.build_tiny_wat import _warc_record
-
-    buf = io.BytesIO()
-    for i, payload in enumerate(payloads):
-        buf.write(
-            _warc_record(
-                "metadata",
-                {
-                    "WARC-Date": "2020-01-01T00:00:00Z",
-                    "WARC-Record-ID": f"<urn:uuid:t-{i}>",
-                    "Content-Type": "application/json",
-                },
-                payload,
-            )
-        )
-    buf.write(tail)
-    with open(path, "wb") as f:
-        f.write(gzip.compress(buf.getvalue(), mtime=0))
-    return str(path)
-
-
-def _payload(rec) -> bytes:
-    return json.dumps(rec, separators=(",", ":")).encode()
-
-
 def _good() -> dict:
     return copy.deepcopy(FIXTURE_RECORDS[0])
 
@@ -155,35 +123,32 @@ def _oracle(records, document_type="image") -> list[tuple]:
 
 
 def _parity_payloads() -> list[bytes]:
-    """The fixture records (the null-Links one included) and every edge
-    the two readers must agree on."""
+    """The fixture records (the null-Links one included) and every
+    payload edge the reader pins."""
     number_url = _good()
     _links(number_url)[0]["url"] = 123
     no_container = _good()
     del no_container["Container"]
-    non_utf8 = _payload(_good()).replace(b'"A cat"', b'"A\xffcat"')
+    non_utf8 = payload(_good()).replace(b'"A cat"', b'"A\xffcat"')
     assert b"\xff" in non_utf8
-    return [_payload(r) for r in FIXTURE_RECORDS] + [
+    return [payload(r) for r in FIXTURE_RECORDS] + [
         b"{not json!!",
-        _payload(number_url),
+        payload(number_url),
         non_utf8,
-        _payload(no_container),
+        payload(no_container),
     ]
 
 
-def test_archive_rows_equal_jsonl_rows(spark, tmp_path):
-    """One contract: the archive reader returns exactly the jsonl
-    reader's rows for the same payloads, in order, one per record — a
-    malformed payload as an all-null row, a JSON number in a string
-    field as its text, a non-UTF-8 byte as U+FFFD."""
+def test_archive_rows_pin_each_payload_edge(spark, tmp_path):
+    """The archive reader returns one row per record, in order: the
+    fixture records as written, a malformed payload as an all-null row,
+    a JSON number in a string field as its text, a non-UTF-8 byte as
+    U+FFFD and a missing Container as null."""
     payloads = _parity_payloads()
-    archive = _gz_warc(tmp_path / "parity.warc.gz", payloads)
-    jsonl = tmp_path / "parity.jsonl"
-    jsonl.write_bytes(b"\n".join(payloads) + b"\n")
+    archive = write_wat_archive(tmp_path / "parity.warc.gz", payloads)
     df = read_wat_archives(spark, [archive])
     assert df.schema == WAT_SCHEMA
     rows = df.collect()
-    assert rows == read_wat_jsonl(spark, str(jsonl)).collect()
     assert len(rows) == len(payloads)
     n = len(FIXTURE_RECORDS)
     assert [r.asDict(recursive=True) for r in rows[:n]] == FIXTURE_RECORDS
@@ -202,11 +167,11 @@ def test_file_tier_drops_already_extracted_records(spark, tmp_path):
     only itself, like a malformed-JSON record: the envelope guards skip
     its all-null fields and the good records of its file are kept. (The
     reference's broad except, main.py:178-183, dropped the whole file.)"""
-    good = _payload(FIXTURE_RECORDS[0])
+    good = payload(FIXTURE_RECORDS[0])
     # file A: good record THEN a structurally broken one
-    fa = _gz_warc(tmp_path / "a.warc.gz", [good, b'{"not_envelope": 1}'])
+    fa = write_wat_archive(tmp_path / "a.warc.gz", [good, b'{"not_envelope": 1}'])
     # file B: malformed JSON between two good records
-    fb = _gz_warc(
+    fb = write_wat_archive(
         tmp_path / "b.warc.gz", [good, b"{not json!!", good]
     )
     assert _rows(iter_wat_batches(fa)) == 2
@@ -219,9 +184,9 @@ def test_file_tier_drops_already_extracted_records(spark, tmp_path):
 def test_wat_source_one_partition_per_archive(spark, tmp_path):
     """The archive scan plans one partition per input archive, so a
     failing file drops only its own partition's rows."""
-    good = _payload(FIXTURE_RECORDS[0])
+    good = payload(FIXTURE_RECORDS[0])
     paths = [
-        _gz_warc(tmp_path / f"{name}.warc.gz", [good] * n)
+        write_wat_archive(tmp_path / f"{name}.warc.gz", [good] * n)
         for name, n in (("a", 1), ("b", 2), ("c", 3))
     ]
     df = read_wat_archives(spark, paths)
@@ -256,7 +221,7 @@ def _numbered_records(n: int) -> list[bytes]:
     for i in range(n):
         rec = _good()
         rec["Envelope"]["WARC-Header-Metadata"]["WARC-Target-URI"] = f"http://e.com/{i}"
-        out.append(_payload(rec))
+        out.append(payload(rec))
     return out
 
 
@@ -274,7 +239,7 @@ def test_batches_cross_chunk_boundaries_in_order(tmp_path):
     archive's metadata payloads, byte for byte and in record order,
     ``BATCH_RECORDS`` per batch (the warcinfo record is not one)."""
     n = 2 * BATCH_RECORDS + 1
-    path = _gz_warc(tmp_path / "long.warc.gz", _numbered_records(n))
+    path = write_wat_archive(tmp_path / "long.warc.gz", _numbered_records(n))
     cases = ((path, [BATCH_RECORDS, BATCH_RECORDS, 1]), (FIXTURE_PATH, [_FIXTURE_PAYLOADS]))
     for archive, sizes in cases:
         batches = list(iter_wat_batches(archive))
@@ -284,17 +249,22 @@ def test_batches_cross_chunk_boundaries_in_order(tmp_path):
     assert _values(iter_wat_batches(path)) == _numbered_records(n)
 
 
-def test_broken_last_record_drops_converted_chunks(tmp_path):
+def test_broken_last_record_drops_converted_chunks(tmp_path, capfd):
     """A WARC framing error ends the archive: every payload framed
-    before it is kept, here two full batches before a truncated record."""
+    before it is kept, here two full batches before a truncated record,
+    and one stderr line names the archive and where it ended."""
     records = _numbered_records(2 * BATCH_RECORDS)
     truncated = b"WARC/1.0\r\nWARC-Type: metadata\r\nContent-Length: 500\r\n\r\n{"
-    path = _gz_warc(tmp_path / "broken.warc.gz", records, tail=truncated)
+    path = write_wat_archive(tmp_path / "broken.warc.gz", records, tail=truncated)
     with pytest.raises(ValueError, match="truncated"):
         _metadata_payloads(path)
     batches = list(iter_wat_batches(path))
     assert [b.num_rows for b in batches] == [BATCH_RECORDS, BATCH_RECORDS]
     assert _values(batches) == records
+    assert capfd.readouterr().err == (
+        f"cc2dataset_spark: {path} ends after {2 * BATCH_RECORDS} payloads: "
+        "ValueError: truncated WARC payload\n"
+    )
 
 
 def test_archive_of_guard_failures_yields_no_batch(spark, tmp_path):
@@ -308,9 +278,9 @@ def test_archive_of_guard_failures_yields_no_batch(spark, tmp_path):
         },
         "Container": {"Filename": "f.warc.gz"},
     }
-    path = _gz_warc(
+    path = write_wat_archive(
         tmp_path / "guards.warc.gz",
-        [_payload(r) for r in (null_links, no_html)],
+        [payload(r) for r in (null_links, no_html)],
     )
     assert _rows(iter_wat_batches(path)) == 2
     df = read_wat_archives(spark, [path])
@@ -320,34 +290,29 @@ def test_archive_of_guard_failures_yields_no_batch(spark, tmp_path):
 
 
 def test_non_string_link_value_drops_the_archive(spark, tmp_path):
-    """A JSON number in a string field is read as its text, as the
-    jsonl reader reads it: the archive is not dropped, the good record
-    is kept, and the number becomes a relative url like any other."""
+    """A JSON number in a string field is read as its text: the
+    archive is not dropped, the good record is kept, and the number
+    becomes a relative url like any other."""
     bad = _good()
     _links(bad)[0]["url"] = 123
-    path = _gz_warc(tmp_path / "int.warc.gz", [_payload(FIXTURE_RECORDS[0]), _payload(bad)])
+    payloads = [payload(FIXTURE_RECORDS[0]), payload(bad)]
+    path = write_wat_archive(tmp_path / "int.warc.gz", payloads)
     _links(bad)[0]["url"] = "123"  # what the parse reads, for the oracle
     got = _extract(read_wat_archives(spark, [path]))
     assert got == _oracle([FIXTURE_RECORDS[0], bad])
     assert ("http://example.com/gallery/123", "A cat") in {(r[1], r[2]) for r in got}
 
 
-@pytest.mark.parametrize("source", ["archives", "jsonl"])
-def test_record_without_container_filename_is_skipped(spark, tmp_path, source):
+def test_record_without_container_filename_is_skipped(spark, tmp_path):
     """The reference indexes Container.Filename, so it never emits a
     link without it: a record with a null Filename or no Container is
-    skipped by both readers, and its neighbours are kept."""
+    skipped, and its neighbours are kept."""
     null_filename = _good()
     null_filename["Container"]["Filename"] = None
     no_container = _good()
     del no_container["Container"]
-    payloads = [_payload(r) for r in (null_filename, FIXTURE_RECORDS[0], no_container)]
-    if source == "archives":
-        df = read_wat_archives(spark, [_gz_warc(tmp_path / "f.warc.gz", payloads)])
-    else:
-        jsonl = tmp_path / "f.jsonl"
-        jsonl.write_bytes(b"\n".join(payloads) + b"\n")
-        df = read_wat_jsonl(spark, str(jsonl))
+    payloads = [payload(r) for r in (null_filename, FIXTURE_RECORDS[0], no_container)]
+    df = read_wat_archives(spark, [write_wat_archive(tmp_path / "f.warc.gz", payloads)])
     assert df.count() == 3
     assert _extract(df, "image_only") == _oracle([FIXTURE_RECORDS[0]], "image_only")
 
@@ -375,20 +340,25 @@ def _fsspec_failing_first(n: int, monkeypatch) -> list[str]:
     return calls
 
 
-def test_warc_iter_retries_flaky_io(monkeypatch):
+def test_warc_iter_retries_flaky_io(monkeypatch, capfd):
     """X6: the whole-file open is retried with backoff and then
     succeeds; when all 10 attempts fail the file is skipped (no rows,
-    no raise) — the reference's file-tier containment
+    no raise, one stderr line) — the reference's file-tier containment
     (main.py:190-200)."""
     sleeps: list[float] = []
     monkeypatch.setattr(time, "sleep", sleeps.append)
     calls = _fsspec_failing_first(2, monkeypatch)
     assert _rows(iter_wat_batches(FIXTURE_PATH)) == _FIXTURE_PAYLOADS
     assert len(calls) == 3 and len(sleeps) == 2  # two failures + one success
+    assert capfd.readouterr().err == ""
 
     calls = _fsspec_failing_first(10, monkeypatch)
     assert list(iter_wat_batches(FIXTURE_PATH)) == []
-    assert len(calls) == 10  # exhausted, skipped silently
+    assert len(calls) == 10  # exhausted and skipped, with a trace
+    assert capfd.readouterr().err == (
+        f"cc2dataset_spark: skipped {FIXTURE_PATH} after 10 failed reads: "
+        "OSError: transient remote failure\n"
+    )
 
 
 def test_remote_path_without_fsspec_fails_loudly(monkeypatch):

@@ -1,5 +1,6 @@
-"""Synthetic WAT fixture records (FIXTURES.md §A1) + a pure-Python
-semantic oracle for the extraction operator.
+"""Synthetic WAT fixture records (FIXTURES.md §A1), a writer of WAT
+archives holding them, and a pure-Python semantic oracle for the
+extraction operator.
 
 The oracle re-derives the reference semantics (predicates, base-URL
 resolution, urljoin absolutization, scheme filter, md5 uid) directly
@@ -9,7 +10,10 @@ differentially without network access or reference code.
 
 from __future__ import annotations
 
+import gzip
 import hashlib
+import io
+import json
 from urllib.parse import urljoin
 
 VIDEO_EXTS = (".avi", ".mp4", ".mkv", ".webm", ".mov", ".mpg", ".mpeg", ".m4v")
@@ -106,6 +110,31 @@ FIXTURE_RECORDS = [
     ),
     empty_record(),
 ]
+
+
+def payload(rec: dict) -> bytes:
+    """A record as the compact JSON payload of a WAT metadata record."""
+    return json.dumps(rec, separators=(",", ":")).encode()
+
+
+def write_wat_archive(path, payloads, tail=b"") -> str:
+    """Write a gzipped WARC of metadata records with the given JSON
+    payload bytes (reusing the fixture builder's record writer),
+    followed by the raw bytes ``tail``; return the path."""
+    from tests.fixtures.build_tiny_wat import _warc_record
+
+    buf = io.BytesIO()
+    for i, body in enumerate(payloads):
+        headers = {
+            "WARC-Date": "2020-01-01T00:00:00Z",
+            "WARC-Record-ID": f"<urn:uuid:t-{i}>",
+            "Content-Type": "application/json",
+        }
+        buf.write(_warc_record("metadata", headers, body))
+    buf.write(tail)
+    with open(path, "wb") as f:
+        f.write(gzip.compress(buf.getvalue(), mtime=0))
+    return str(path)
 
 
 def oracle_extract(records: list[dict], document_type: str) -> list[tuple]:
