@@ -24,8 +24,9 @@ bench-wat-trace:
 	python3 perfbench/run.py --workload wat_image --seed 1 --seconds 5 --trace 1
 	python3 perfbench/run.py --workload wat_text --seed 1 --seconds 5 --trace 1
 
+# the driver simulation over every catalog query, or over Q="name ..."
 verify:
-	cd /tmp && python $(CURDIR)/tools/driver_sim.py
+	cd /tmp && python $(CURDIR)/tools/driver_sim.py $(Q)
 
 plans:
 	python tools/explain_audit.py

@@ -43,22 +43,6 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     return F.when(k <= 0, F.array().cast("array<string>")).otherwise(acc)
 
 
-def char_ngrams(col: Column | str, n: int = 5) -> Column:
-    """Array of character n-grams. NULL input yields NULL (matching
-    word_shingles) — without the explicit null branch, the k <= 0
-    guard evaluates NULL (falsy, so the otherwise branch runs) and
-    greatest(NULL, 0) SKIPS the null, making sequence(1, 0) emit the
-    DESCENDING [1, 0] — two phantom null grams per null row."""
-    c = F.col(col) if isinstance(col, str) else col
-    k = F.length(c) - (n - 1)
-    idx = F.sequence(F.lit(1), F.greatest(k, F.lit(0)))
-    return (
-        F.when(c.isNull(), F.lit(None).cast("array<string>"))
-        .when(k <= 0, F.array().cast("array<string>"))
-        .otherwise(F.transform(idx, lambda i: F.substring(c, i, F.lit(n))))
-    )
-
-
 def punct_ratio(col: Column | str) -> Column:
     """Fraction of characters that are not ASCII alphanumeric/space.
     DELIBERATELY ASCII-scoped (the regex has a verbatim RE2/DuckDB
@@ -70,12 +54,6 @@ def punct_ratio(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     stripped = F.regexp_replace(c, r"[A-Za-z0-9\s]", "")
     return F.when(F.length(c) > 0, F.length(stripped) / F.length(c)).otherwise(0.0)
-
-
-def mean_word_length(col: Column | str) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(0.0)
 
 
 def quality_score_from_tokens(
@@ -163,14 +141,6 @@ def lang_id(col: Column | str) -> Column:
         tokens(F.lower(F.col(col) if isinstance(col, str) else col))
     )
     return lang_id_from_tokens(toks)
-
-
-def fingerprint64(col: Column | str) -> Column:
-    """64-bit document fingerprint (xxhash64 of normalized text) —
-    deterministic content id for exact dedup at scale."""
-    c = F.col(col) if isinstance(col, str) else col
-    normalized = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
-    return F.xxhash64(normalized)
 
 
 def shingle_hashes(col: Column | str, shingle_words: int = 3) -> Column:

@@ -40,11 +40,6 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return F.when(n > 0, d / n).otherwise(F.lit(0.0))
 
 
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    diffs = F.zip_with(_c(a), _c(b), lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v))
-
-
 def as_double_array(a: Column | str) -> Column:
     """Promote array<float> to array<double> so all arithmetic happens
     in double (deterministic across engines)."""

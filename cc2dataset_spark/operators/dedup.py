@@ -117,20 +117,6 @@ def upsert_by_key(
     )
 
 
-def dedup_by_fingerprint(
-    df: DataFrame, fingerprint: Column, id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact content dedup via a content hash: keeps the row with the
-    smallest id per fingerprint. One shuffle on the (64-bit) hash —
-    at 100 TB this shuffles only {hash, id, payload-needed-columns},
-    and the hash groupBy is skew-free by construction."""
-    return dedup_exact(
-        df.withColumn("_fp", fingerprint),
-        keys=["_fp"],
-        order_by=[F.col(id_col)],
-    ).drop("_fp")
-
-
 def bloom_prefilter(
     batch: DataFrame,
     index_fingerprints: DataFrame,

@@ -39,11 +39,7 @@ def planned_partitions(df: DataFrame) -> int:
     return n
 
 
-def spread_small_input(
-    df: DataFrame,
-    min_parts: int | None = None,
-    ref: DataFrame | None = None,
-) -> DataFrame:
+def spread_small_input(df: DataFrame, ref: DataFrame | None = None) -> DataFrame:
     """Round-robin repartition ``df`` to the session's default
     parallelism iff its current partition count is lower. Spark's
     round-robin repartition sorts within partitions first, so the
@@ -56,8 +52,7 @@ def spread_small_input(
     absorb the driver-side planning pass across query builds; the
     count is identical because narrow projections never change
     partitioning."""
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         n_parts = planned_partitions(ref if ref is not None else df)
     except Exception:

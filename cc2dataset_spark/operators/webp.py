@@ -377,16 +377,6 @@ def _split(px: int):
     return (px >> 24) & 0xFF, (px >> 16) & 0xFF, (px >> 8) & 0xFF, px & 0xFF
 
 
-def _avg2(a: int, b: int, sa, sb) -> int:
-    """Per-channel (a+b)//2 on packed ARGB via the split tuples."""
-    return (
-        (((sa[0] + sb[0]) >> 1) << 24)
-        | (((sa[1] + sb[1]) >> 1) << 16)
-        | (((sa[2] + sb[2]) >> 1) << 8)
-        | ((sa[3] + sb[3]) >> 1)
-    )
-
-
 def _predict(mode: int, left: int, top: int, tl: int, tr: int) -> int:
     """The 14 spatial predictors (spec §4.2 / the reference decoder's
     Predictor0..13), exact integer semantics including the truncated

@@ -2,12 +2,14 @@
 
 The driver's correctness gate hashes TYPED values, so an oracle whose
 column type diverges from the Spark schema fails the driver even when
-every value matches numerically. The local harness's ``_norm``
-(oracle_harness.py) coerces Decimal->float for value comparison, which
-masks exactly this class of bug — r5's only red driver row
-(``events_sessionize``) was DuckDB HUGEINT vs Spark BIGINT with zero
-value diffs. This test compares COARSE type classes per column so the
-divergence is caught locally:
+every value matches numerically. The value comparator
+(``oracle_harness.compare``) keeps Decimals exact and apart from
+doubles, but it maps an INTEGRAL Decimal to ``int``: a DuckDB HUGEINT
+(fetched as Decimal) against a Spark BIGINT compares equal there and
+still fails the driver's typed hasher — r5's only red driver row
+(``events_sessionize``) was exactly that, with zero value diffs. This
+test compares COARSE type classes per column so the divergence is
+caught locally:
 
 - all machine ints are one class (the driver fetches Python ints either
   way), but DuckDB HUGEINT (int128 -> Decimal on fetch) is its own
