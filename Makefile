@@ -7,9 +7,11 @@ test:
 test-full:
 	python -m pytest tests/ -q -m "slow or not slow"
 
-# every tier of the suites that read WAT archives through the pipeline
+# every tier of the suites that read WAT archives through the pipeline,
+# then the urljoin parity properties
 test-pipeline:
 	python -m pytest tests/test_warc_source.py tests/test_pipeline.py tests/test_extraction.py tests/test_files_cli.py -q -m "slow or not slow"
+	python -m pytest tests/test_properties.py -k "urljoin or absolute" -q -m "slow or not slow"
 
 bench:
 	python bench.py

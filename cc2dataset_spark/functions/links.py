@@ -4,22 +4,26 @@ Column expressions over exploded WAT link structs.
 Reference semantics: /root/reference/cc2dataset/main.py:23-131 (predicates
 and projections), main.py:104-114 (absolutization), main.py:157-164 (base
 URL), main.py:166-176 (scheme filter, uid, provenance). Everything is a
-JVM-side expression except RFC-3986 ``urljoin``, which has no Spark
-built-in: scalar kernels :func:`resolve_base` and :func:`join_url` define
-it, and :func:`absolute_http_urls` fuses them with the scheme filter into
-the pipeline's one Python (pandas/Arrow) UDF, so each link crosses into
-Python once over a single source scan (a split/union plan scans twice).
+JVM-side expression, Python's ``urljoin`` included, which has no Spark
+built-in: the scalar kernels :func:`resolve_base`, :func:`join_url` and
+:func:`absolute_http_url` define it (and are the test oracle), and
+:func:`with_resolved_base` (per record) with :func:`with_absolute_http_url`
+(per link) reproduce them byte for byte as projections, so extraction
+runs no Python worker.
 """
 
 from __future__ import annotations
 
 import functools
+import re
+import string
+from urllib.parse import urlsplit, uses_netloc, uses_params, uses_relative
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import StringType
 
 VIDEO_EXTS = (".avi", ".mp4", ".mkv", ".webm", ".mov", ".mpg", ".mpeg", ".m4v")
 AUDIO_EXTS = (".ogg", ".wav", ".mp3", ".flac", ".m4a")
@@ -153,15 +157,308 @@ def resolve_base_udf(page_url: pd.Series, base_raw: pd.Series) -> pd.Series:
     return pd.Series([resolve_base(p, b) for p, b in zip(page_url, base_raw)])
 
 
-@pandas_udf(ArrayType(StringType()))
-def absolute_http_urls(
-    page_url: pd.Series, base_raw: pd.Series, url: pd.Series
-) -> pd.Series:
-    """:func:`absolute_http_url` over Arrow batches, for ``explode``: a
-    ``where()`` on a string result would be pushed below the projection
-    with the UDF inlined into it, so the UDF would run twice."""
-    return pd.Series(
-        [absolute_http_url(p, b, u) for p, b, u in zip(page_url, base_raw, url)]
+# Python's urljoin as SQL expressions (P10/P11, main.py:104-114,157-172),
+# mirroring CPython 3.11's urllib/parse.py (urlsplit, urlparse, urlunparse,
+# urljoin) step for step, with the scheme lists and the bracketed-netloc
+# check of the installed module. Each stage is one projection; a part read
+# twice is a projection attribute, never a copied subtree. The stages are
+# SQL text, so building them costs one JVM call per stage, not one per
+# node; the driver analyses every node on each operation, so a membership
+# test is one RLIKE, not an IN list of literals.
+_WHATWG_STRIP = r"^[\x00-\x20]+|[\t\r\n]"  # urlsplit's lstrip and unsafe bytes
+# urlsplit + _splitparams in one match, parts joined by '\n' (which the
+# strip removed): scheme (scheme_chars up to the first ':'), '//netloc',
+# the path up to its params (';' after the last '/'), ';params', '?query',
+# '#fragment'
+_URL_PARTS = (
+    r"(?s)^(?:([A-Za-z][A-Za-z0-9+.\-]*):)?(//[^/?#]*)?"
+    r"((?:[^?#]*/)?[^/;?#]*)(;[^?#]*)?(\?[^#]*)?(#.*)?\z"
+)
+_H16 = "[0-9A-Fa-f]{1,4}"
+_OCTET = "(?:25[0-5]|2[0-4][0-9]|1[0-9]{2}|[1-9]?[0-9])"
+_LS32 = rf"(?:{_H16}:{_H16}|{_OCTET}(?:\.{_OCTET}){{3}})"
+_IPV6 = "|".join(
+    (
+        rf"(?:{_H16}:){{6}}{_LS32}",
+        rf"::(?:{_H16}:){{5}}{_LS32}",
+        rf"(?:{_H16})?::(?:{_H16}:){{4}}{_LS32}",
+        rf"(?:(?:{_H16}:){{0,1}}{_H16})?::(?:{_H16}:){{3}}{_LS32}",
+        rf"(?:(?:{_H16}:){{0,2}}{_H16})?::(?:{_H16}:){{2}}{_LS32}",
+        rf"(?:(?:{_H16}:){{0,3}}{_H16})?::{_H16}:{_LS32}",
+        rf"(?:(?:{_H16}:){{0,4}}{_H16})?::{_LS32}",
+        rf"(?:(?:{_H16}:){{0,5}}{_H16})?::{_H16}",
+        rf"(?:(?:{_H16}:){{0,6}}{_H16})?::",
+    )
+)
+# _check_bracketed_host, on the text a bracketed host runs to (up to ']'):
+# an IPvFuture address, or what ipaddress parses as IPv6 (the RFC 3986
+# grammar, plus a %scope_id)
+_BRACKETED_HOST_OK = rf"v[0-9A-Fa-f]+\.[^\]]+|(?:{_IPV6})(?:%[^%\]]+)?"
+_DOT_SEGMENT = r"(?:^|/)\.\.?(?:/|\z)"
+_TRAILING_DOT_SEGMENT = r"(?:^|/)\.\.?\z"
+_PARTS_JOINED = "\n".join(f"${i}" for i in range(1, 7))
+# urljoin takes the netloc from the base for every scheme it resolves
+assert set(uses_relative) <= set(uses_netloc)
+
+
+def _brackets_after_last_at() -> bool:
+    """Which bracketed-host check the installed urlsplit runs on a netloc
+    holding '[' and ']'. Patch releases with ``_check_bracketed_netloc``
+    check the host after the last '@', where nothing may come before '['
+    and only ':port' after ']' ('//a[::1]/' raises); earlier ones check
+    what follows the first '[' ('//a[::1]/' is a netloc)."""
+    try:
+        urlsplit("//a[::1]/")
+    except ValueError:
+        return True
+    return False
+
+
+_BRACKETS_AFTER_LAST_AT = _brackets_after_last_at()
+
+
+def _sql(s: str) -> str:
+    """A SQL string literal holding ``s``."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'").replace("\n", "\\n") + "'"
+
+
+def _scheme_in(scheme: str, schemes: list[str]) -> str:
+    """``scheme IN schemes`` as one RLIKE (a scheme is lowercase
+    scheme_chars, or '')."""
+    pattern = "^(?:" + "|".join(map(re.escape, schemes)) + r")\z"
+    return f"{scheme} RLIKE {_sql(pattern)}"
+
+
+@functools.cache
+def _nfkc_netloc_chars() -> str:
+    """_checknetloc as a character class: the characters whose NFKC form
+    holds one of '/?#@:'. No composition starts with one of those five, so
+    NFKC(netloc) holds one exactly when the netloc holds such a character."""
+    import unicodedata
+
+    bad = (
+        chr(c)
+        for c in range(0x80, 0x110000)
+        if unicodedata.decomposition(chr(c))
+        and any(x in unicodedata.normalize("NFKC", chr(c)) for x in "/?#@:")
+    )
+    return "[" + "".join(f"\\x{{{ord(ch):x}}}" for ch in bad) + "]"
+
+
+def _netloc_error_pattern(after_last_at: bool) -> str:
+    """A regex found in exactly the netlocs urlsplit raises ValueError on:
+    unbalanced brackets, a bracketed host that is not IPv6 or IPvFuture,
+    or a character whose NFKC form is one of '/?#@:' (_checknetloc).
+    Which host a netloc holding '[' and ']' has depends on the patch
+    release (see :data:`_BRACKETS_AFTER_LAST_AT`)."""
+    unbalanced = r"^[^\]]*\[[^\]]*\z|^[^\[]*\][^\[]*\z"
+    if after_last_at:
+        # _check_bracketed_netloc on the part after the last '@': '[' must
+        # begin it and only ':port' may follow ']'; without a '[', the
+        # host is the text before the first ':'
+        valid = (
+            rf"(?:\[(?:{_BRACKETED_HOST_OK})(?:\](?::[^@]*)?)?"
+            r"|v[0-9A-Fa-f]+\.[^:@\[]+(?::[^@\[]*)?)\z"
+        )
+        bracketed = rf"^(?=.*\[)(?=.*\])(?:.*@)?(?!{valid})[^@]*\z"
+    else:
+        # netloc.partition('[')[2].partition(']')[0]
+        bracketed = rf"^(?=.*\])[^\[]*\[(?!(?:{_BRACKETED_HOST_OK})(?:\]|\z))"
+    return f"(?s){unbalanced}|{bracketed}|{_nfkc_netloc_chars()}"
+
+
+def _url_parts(url: str) -> str:
+    """urlsplit's six raw parts of ``url``, as an array: the one regex pass
+    over a URL, so it is materialized."""
+    cleaned = f"regexp_replace({url}, {_sql(_WHATWG_STRIP)}, '')"
+    joined = f"regexp_replace({cleaned}, {_sql(_URL_PARTS)}, {_sql(_PARTS_JOINED)})"
+    return f"split({joined}, {_sql(chr(10))}, -1)"
+
+
+# the urlparse fields urljoin reads of its base; of its url it also reads
+# the fragment
+_BASE_FIELDS = ("scheme", "netloc", "path", "params", "query", "err")
+_URL_FIELDS = (*_BASE_FIELDS, "fragment")
+
+
+def _url_fields(parts: str, default_scheme: str, p: str, fields: tuple[str, ...]) -> dict[str, str]:
+    """urlparse(url, default_scheme) from the :func:`_url_parts` column
+    ``parts``, as SQL for the columns ``{p}scheme``, ``netloc``, ``path``,
+    ``params``, ``query``, ``err`` (urlsplit raises ValueError) and, in
+    :data:`_URL_FIELDS`, ``fragment``."""
+    raw = [None, *(f"element_at({parts}, {i})" for i in range(1, 7))]
+    # the scheme is ASCII: translate lowercases it without lower()'s ICU
+    # case mapping, whose first use costs a cold JVM about a second
+    lowered = f"translate({raw[1]}, {_sql(string.ascii_uppercase)}, {_sql(string.ascii_lowercase)})"
+    scheme = f"(CASE WHEN {raw[1]} = '' THEN {default_scheme} ELSE {lowered} END)"
+    split_params = _scheme_in(scheme, uses_params)
+    netloc = f"substr({raw[2]}, 3)"
+    sql = {
+        "scheme": scheme,
+        "netloc": netloc,
+        "path": f"(CASE WHEN {split_params} THEN {raw[3]} ELSE concat({raw[3]}, {raw[4]}) END)",
+        "params": f"(CASE WHEN {split_params} THEN substr({raw[4]}, 2) ELSE '' END)",
+        "query": f"substr({raw[5]}, 2)",
+        "err": f"{netloc} RLIKE {_sql(_netloc_error_pattern(_BRACKETS_AFTER_LAST_AT))}",
+        "fragment": f"substr({raw[6]}, 2)",
+    }
+    return {p + name: sql[name] for name in fields}
+
+
+def _fields(p: str, fields: tuple[str, ...]) -> dict[str, str]:
+    """The columns :func:`_url_fields` materialized with prefix ``p``."""
+    return {name: p + name for name in fields}
+
+
+def _urljoin(
+    base: str, url: str, b: dict[str, str], u: dict[str, str], on_error: str, out: str
+) -> tuple[list[dict[str, str]], str]:
+    """urljoin(base, url) from the :func:`_url_fields` of ``base`` (``b``)
+    and of ``url`` (``u``): the stages that materialize its parts as
+    ``{out}_netloc``, ``_params``, ``_segs``, ``_stack``, ``_path`` and
+    ``_query``, and the SQL of the joined URL, which is ``on_error`` where
+    urljoin raises ValueError."""
+    netloc, params, segs, stack, path, query = (
+        f"{out}_{part}" for part in ("netloc", "params", "segs", "stack", "path", "query")
+    )
+    has_netloc = f"{u['netloc']} <> ''"
+    inherit = f"({u['netloc']} = '' AND {u['path']} = '' AND {u['params']} = '')"
+    # base_parts = bpath.split('/') without a non-empty last item, '/'-joined;
+    # a lone '' stays, so an empty path gives a leading '/'
+    bpath = b["path"]
+    bdir = (
+        f"CASE WHEN {bpath} = '' THEN '/'"
+        f" ELSE left({bpath}, length({bpath}) - length(substring_index({bpath}, '/', -1))) END"
+    )
+    stages = [
+        {
+            netloc: f"CASE WHEN {has_netloc} THEN {u['netloc']} ELSE {b['netloc']} END",
+            params: f"CASE WHEN {inherit} THEN {b['params']} ELSE {u['params']} END",
+            # the segments, '/'-joined: base_parts + path.split('/') with
+            # the empty middle segments filtered, or the path alone if
+            # rooted; NULL where the url's netloc or the base's path is kept
+            segs: f"CASE WHEN NOT {has_netloc} AND NOT {inherit} THEN"
+            f" CASE WHEN startswith({u['path']}, '/') THEN {u['path']}"
+            f" ELSE regexp_replace(concat({bdir}, {u['path']}), '/+', '/') END END",
+        },
+        {
+            # only segments with a '.' or '..' go through the stack: '..'
+            # pops (above the root it is ignored), '.' is skipped
+            stack: f"CASE WHEN {segs} RLIKE {_sql(_DOT_SEGMENT)} THEN array_join(aggregate("
+            f"split({segs}, '/', -1), CAST(array() AS ARRAY<STRING>), (stack, seg) ->"
+            " CASE WHEN seg = '..' THEN slice(stack, 1, greatest(size(stack) - 1, 0))"
+            " WHEN seg = '.' THEN stack ELSE array_append(stack, seg) END), '/') END",
+        },
+        {
+            # a trailing '.' or '..' keeps its '/', and an empty path is '/'
+            path: f"concat(CASE WHEN {has_netloc} THEN {u['path']} WHEN {segs} IS NULL THEN {bpath}"
+            f" WHEN {segs} = '' OR {stack} = '' THEN '/' WHEN {stack} IS NULL THEN {segs}"
+            f" WHEN {segs} RLIKE {_sql(_TRAILING_DOT_SEGMENT)} THEN concat({stack}, '/')"
+            f" ELSE {stack} END, CASE WHEN {params} <> '' THEN concat(';', {params}) ELSE '' END)",
+            query: f"CASE WHEN {inherit} AND {u['query']} = '' THEN {b['query']}"
+            f" ELSE {u['query']} END",
+        },
+    ]
+    scheme = u["scheme"]
+    slashes = (
+        f"({netloc} <> '' OR ({scheme} <> '' AND {_scheme_in(scheme, uses_netloc)}"
+        f" AND NOT startswith({path}, '//')))"
+    )
+    unparsed = (
+        f"concat(CASE WHEN {scheme} <> '' THEN concat({scheme}, ':') ELSE '' END,"
+        f" CASE WHEN {slashes} THEN concat('//', {netloc}) ELSE '' END,"
+        f" CASE WHEN {slashes} AND {path} <> '' AND NOT startswith({path}, '/')"
+        f" THEN '/' ELSE '' END, {path},"
+        f" CASE WHEN {query} <> '' THEN concat('?', {query}) ELSE '' END,"
+        f" CASE WHEN {u['fragment']} <> '' THEN concat('#', {u['fragment']}) ELSE '' END)"
+    )
+    joined = (
+        f"CASE WHEN {base} IS NULL OR {base} = '' THEN {url}"
+        f" WHEN {url} IS NULL OR {url} = '' THEN {base}"
+        f" WHEN {b['err']} OR {u['err']} THEN {on_error}"
+        f" WHEN {scheme} <> {b['scheme']} OR NOT {_scheme_in(scheme, uses_relative)} THEN {url}"
+        f" ELSE {unparsed} END"
+    )
+    return stages, joined
+
+
+def _stages(df: DataFrame, stages: list[dict[str, str]]) -> DataFrame:
+    for stage in stages:
+        df = df.selectExpr("*", *(f"{sql} AS {name}" for name, sql in stage.items()))
+    return df
+
+
+_IS_HTTP = "(startswith({0}, 'http://') OR startswith({0}, 'https://'))"
+
+
+def with_resolved_base(df: DataFrame, page: str = "page_url", base: str = "base_raw") -> DataFrame:
+    """Per record, the base every link of the page joins to:
+    :func:`resolve_base` as column ``__base``, with the urlparse fields
+    urljoin reads of it as ``__base_*``. Run it before ``explode(links)``,
+    so each base is resolved and parsed once per record."""
+    keep = df.columns
+    page_sql, base_sql = f"`{page}`", f"`{base}`"
+    page_fields = _url_fields("__page_parts", "''", "__page_", _BASE_FIELDS)
+    join, joined = _urljoin(
+        page_sql,
+        base_sql,
+        _fields("__page_", _BASE_FIELDS),
+        _fields("__braw_", _URL_FIELDS),
+        page_sql,
+        "__braw_join",
+    )
+    df = _stages(
+        df,
+        [
+            {
+                # the page is parsed as a base only when there is a <base href>
+                "__page_parts": _url_parts(f"CASE WHEN {base_sql} IS NOT NULL THEN {page_sql} END"),
+                "__braw_parts": _url_parts(base_sql),
+            },
+            {
+                **page_fields,
+                **_url_fields("__braw_parts", page_fields["__page_scheme"], "__braw_", _URL_FIELDS),
+            },
+            *join,
+            {"__base": f"CASE WHEN {base_sql} IS NULL THEN {page_sql} ELSE {joined} END"},
+            {"__base_parts": _url_parts("__base")},
+            _url_fields("__base_parts", "''", "__base_", _BASE_FIELDS),
+        ],
+    )
+    return df.select(*keep, "__base", *_fields("__base_", _BASE_FIELDS).values())
+
+
+def with_absolute_http_url(df: DataFrame, url: str, out: str) -> DataFrame:
+    """Per link, :func:`absolute_http_url` as column ``out``: the absolute
+    http(s) URL, or NULL where the kernel returns ``[]``. ``df`` carries the
+    columns :func:`with_resolved_base` added. An absolute http(s) URL takes
+    the ``startswith`` branch: every part of its join is NULL, so it costs
+    no regex."""
+    keep = [f"`{c}`" for c in df.columns if not c.startswith("__base")]
+    url_sql = f"`{url}`"
+    is_http = _IS_HTTP.format(url_sql)
+    relative = f"CASE WHEN NOT {is_http} THEN {url_sql} END"
+    join, joined = _urljoin(
+        "__base",
+        "__rel",
+        _fields("__base_", _BASE_FIELDS),
+        _fields("__url_", _URL_FIELDS),
+        "NULL",
+        "__join",
+    )
+    df = _stages(
+        df,
+        [
+            {"__rel": relative, "__url_parts": _url_parts(relative)},
+            _url_fields("__url_parts", "__base_scheme", "__url_", _URL_FIELDS),
+            *join,
+            {"__join": joined},
+        ],
+    )
+    return df.selectExpr(
+        *keep,
+        f"CASE WHEN {url_sql} IS NULL THEN NULL WHEN {is_http} THEN {url_sql}"
+        f" WHEN {_IS_HTTP.format('__join')} THEN __join END AS `{out}`",
     )
 
 

@@ -7,8 +7,9 @@ cc_filename, page_url] — semantically identical to
 extract_documents_from_wat (/root/reference/cc2dataset/main.py:134-183),
 but expressed as explode + Column predicates + md5, so Catalyst applies
 nested-schema pruning (only the navigated JSON paths are read from
-parquet), predicate pushdown, and whole-stage codegen. Python runs once
-per kept link: one Arrow-batched UDF for base, urljoin and scheme filter.
+parquet), predicate pushdown, and whole-stage codegen. No Python runs
+here: the base, urljoin and the scheme filter are JVM expressions, so a
+scan task's one Python worker is the source's.
 """
 
 from __future__ import annotations
@@ -17,10 +18,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cc2dataset_spark.functions.links import (
-    absolute_http_urls,
     link_alt,
     link_predicate,
     uid_column,
+    with_absolute_http_url,
+    with_resolved_base,
 )
 
 _HTML_META = "Envelope.`Payload-Metadata`.`HTTP-Response-Metadata`.`HTML-Metadata`"
@@ -55,25 +57,28 @@ def extract_document_links(wat_df: DataFrame, document_type: str) -> DataFrame:
     """WAT records -> deduplicable (uid, url, alt, cc_filename, page_url).
 
     Plan stages (all narrow — zero shuffles, one source scan):
-      1. envelope guards (P9)
+      1. envelope guards (P9), and the base URL resolved and parsed
+         once per record (main.py:157-164); a malformed Base falls back
+         to the page url, like the reference
       2. explode(Links) — the 1->N expansion (main.py:166)
       3. per-type predicate + projection (P1-P8)
-      4. base URL, absolutization, scheme filter (P10/P11,
-         main.py:157-172): one Arrow UDF returning [url] or [], exploded;
-         a malformed Base falls back to the page url, like the reference
+      4. absolutization and scheme filter (P10/P11, main.py:166-172):
+         the url or NULL, exploded as a 0-or-1 array
       5. uid + provenance (P12/P13, main.py:173-176)
     """
-    # no when() or split/union gate around the UDF: Spark evaluates a
-    # UDF under when() for every row anyway, and a union scans twice
-    exploded = _guarded(wat_df).select(
-        F.explode("links").alias("link"), "base_raw", "page_url", "cc_filename"
-    )
-    url = absolute_http_urls(
-        F.col("page_url"), F.col("base_raw"), F.coalesce(F.col("link.url"), F.lit(""))
-    )
-    absolute = exploded.where(link_predicate(document_type)).select(
-        F.explode(url).alias("url"),
+    records = with_resolved_base(_guarded(wat_df), "page_url", "base_raw")
+    exploded = records.select(F.explode("links").alias("link"), "*").drop("links")
+    kept = exploded.where(link_predicate(document_type)).select(
+        F.coalesce(F.col("link.url"), F.lit("")).alias("link_url"),
         link_alt(document_type).alias("alt"),
+        "*",
+    )
+    resolved = with_absolute_http_url(kept, "link_url", "abs_url")
+    # explode a 0-or-1 array: a where() on the url would be pushed below
+    # the projection with the whole join copied into the Filter
+    absolute = resolved.select(
+        F.explode(F.when(F.col("abs_url").isNotNull(), F.array("abs_url"))).alias("url"),
+        "alt",
         "cc_filename",
         "page_url",
     )

@@ -10,11 +10,11 @@ stage has real work.
 
 ``cc_extract_image_wat`` drives the actual extraction operator
 (operators/extraction.py) over WAT-shaped records derived from the
-documents fixture — including the urljoin UDF, whose fixture inputs
-resolve through deterministic RFC-3986 cases the DuckDB oracle replays,
-so the query is fully value-checked; the UDF's general-case parity is
-additionally covered byte-for-byte by tests/test_extraction.py and
-fuzzing in tests/test_properties.py.
+documents fixture — including the urljoin expressions, whose fixture
+inputs resolve through deterministic RFC-3986 cases the DuckDB oracle
+replays, so the query is fully value-checked; their general-case parity
+with Python's urljoin is additionally covered byte-for-byte by
+tests/test_extraction.py and fuzzing in tests/test_properties.py.
 """
 
 from __future__ import annotations
@@ -203,14 +203,14 @@ def _wat_records_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("layer_a", "extraction"),
 )
 def cc_extract_image_wat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The real WAT extraction operator (explode + P4 + urljoin UDF +
+    """The real WAT extraction operator (explode + P4 + urljoin +
     P11/P12) over WAT records derived from the documents fixture,
     deduped by uid — the reference's full single-part dataflow minus
     the archive decode, at fixture scale (~2 image links per record,
     half of them relative). Oracle-backed: the fixture's relative URLs
     resolve through deterministic RFC-3986 cases the SQL replays
     (hermetic twin of reference tests/test_single_warc.py golden
-    counts); the UDF's general-case parity is fuzz-tested in
+    counts); urljoin's general-case parity is fuzz-tested in
     tests/test_properties.py.
 
     The uid dedup is a DETERMINISTIC min-struct survivor (r8; was

@@ -326,3 +326,41 @@ def test_asof_rejects_bad_how_and_name_clash(spark):
             left, right, "k", "k", "lts", "rts", ["v"],
             right_tiebreak="rid",
         )
+
+
+def test_asof_forward_next_order_matches_oracle_on_shifted_events(spark, sf_dir):
+    """The forward as-of join over real fixture rows. On the fixture,
+    ``join_asof_forward_next_order`` returns 0 rows (every event falls in
+    2024-01, the last order is dated 2001-08), so here the events move 26
+    years back into the orders' range, and the query's own SQL runs on
+    the same shift."""
+    from tests.oracle_harness import compare, duckdb_conn
+
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", (F.col("ts") - F.expr("INTERVAL 26 YEARS")).alias("ts")
+    )
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderdate", "o_orderkey"
+    )
+    got = asof_join_union(
+        events,
+        orders,
+        left_key="user_id",
+        right_key="o_custkey",
+        left_ts="ts",
+        right_ts="o_orderdate",
+        right_values=["o_orderkey", "o_orderdate"],
+        right_tiebreak="o_orderkey",
+        how="inner",
+        direction="forward",
+    ).select(
+        "event_id",
+        "user_id",
+        F.col("o_orderkey").alias("next_orderkey"),
+        F.col("o_orderdate").alias("next_orderdate"),
+    )
+    oracle = QUERIES["join_asof_forward_next_order"].oracle
+    shifted = "(SELECT event_id, user_id, ts - INTERVAL 26 YEAR AS ts FROM events) e"
+    assert oracle.count("FROM events e") == 1
+    sql = oracle.replace("FROM events e", f"FROM {shifted}")
+    assert compare(got, duckdb_conn(sf_dir), sql, name="join_asof_forward_shifted") > 0

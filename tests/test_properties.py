@@ -13,14 +13,31 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from cc2dataset_spark.functions.links import absolute_http_urls, urljoin_udf
+from cc2dataset_spark.functions.links import (
+    urljoin_udf,
+    with_absolute_http_url,
+    with_resolved_base,
+)
 from cc2dataset_spark.operators.asof import asof_join_union
 from cc2dataset_spark.operators.dedup import dedup_exact
 
 URL_CHARS = st.text(
-    alphabet="abcdefghijklmnopqrstuvwxyzABC0123456789-._~:/?#[]@!$&'()*+,;=% é中",
+    alphabet="abcdefghijklmnopqrstuvwxyzABC0123456789-._~:/?#[]@!$&'()*+,;=% é中"
+    "\x00\x01\x1f\t\r\n\u2100\uff1a\ufe56",  # C0, space, tab/CR/LF, NFKC-unsafe
     max_size=40,
 )
+# a scheme in mixed case, or none; http: without a netloc; ;params
+SCHEMES = st.sampled_from(["", "http:", "HTTP:", "Https:", "ftp:", "x-y:", "http://"])
+HOSTS = st.sampled_from(
+    [
+        "//h.io/", "//[::1]/", "//[1.2.3.4]/", "//[v1.x]/", "//[zz]/", "//[", "//a\u2100b/", "//\u00e9.fr/",
+        # text before '[' or after ']', and '@' around the brackets
+        "//a[::1]/", "//[::1]x/", "//[::1]@h/", "//u[v@[::1]/", "//u@[::1]:80/",
+    ]
+)
+SEGMENTS = st.lists(
+    st.sampled_from(["a", "", ".", "..", "b;p", ";q", "c?q", "#f"]), max_size=6
+).map("/".join)
 BASES = st.one_of(
     st.just("http://example.com/a/b/c.html"),
     st.just("https://h.io/x/"),
@@ -34,11 +51,14 @@ URLS = st.one_of(
     URL_CHARS.map(lambda s: "http://abs.io/" + s),
     URL_CHARS.map(lambda s: "mailto:" + s),
     st.just(""),
+    st.tuples(st.sampled_from(["", " ", "\x00", "\t"]), SCHEMES, SEGMENTS).map("".join),
+    st.tuples(SCHEMES, HOSTS, SEGMENTS).map("".join),
 )
 PAGES = st.one_of(
     st.just("http://example.com/a/b/c.html"),
     st.just("https://h.io/x/"),
     URL_CHARS.map(lambda s: "https://p.org/" + s),
+    st.tuples(SCHEMES, HOSTS, SEGMENTS).map("".join),
 )
 BASE_RAWS = st.one_of(
     st.none(),
@@ -46,6 +66,8 @@ BASE_RAWS = st.one_of(
     URL_CHARS,
     URL_CHARS.map(lambda s: "/" + s),
     URL_CHARS.map(lambda s: "https://b.net/" + s),
+    st.tuples(SCHEMES, HOSTS, SEGMENTS).map("".join),
+    st.tuples(SCHEMES, SEGMENTS).map("".join),
 )
 
 
@@ -60,7 +82,7 @@ def _py_reference(base: str, url: str) -> str:
         return url
 
 
-@settings(max_examples=5, deadline=None)
+@settings(max_examples=50, deadline=None)
 @given(st.lists(st.tuples(BASES, URLS), min_size=1, max_size=60))
 def test_urljoin_udf_matches_python(spark, pairs):
     df = spark.createDataFrame(
@@ -88,19 +110,14 @@ def _py_fused_reference(page: str, base_raw, url: str) -> list:
     return [url] if url.startswith(("http://", "https://")) else []
 
 
-@settings(max_examples=5, deadline=None)
+@settings(max_examples=50, deadline=None)
 @given(st.lists(st.tuples(PAGES, BASE_RAWS, URLS), min_size=1, max_size=60))
 def test_absolute_http_urls_matches_python(spark, triples):
     df = spark.createDataFrame(
-        pd.DataFrame(triples, columns=["page", "base_raw", "url"]),
-        "page string, base_raw string, url string",
+        [(i, *t) for i, t in enumerate(triples)], "i int, page string, base string, url string"
     ).coalesce(1)
-    got = [
-        list(r.out)
-        for r in df.select(
-            absolute_http_urls("page", "base_raw", "url").alias("out")
-        ).collect()
-    ]
+    out = with_absolute_http_url(with_resolved_base(df, "page", "base"), "url", "out")
+    got = [[r.out] if r.out is not None else [] for r in out.orderBy("i").collect()]
     want = [_py_fused_reference(p, b, u) for p, b, u in triples]
     assert got == want
 
