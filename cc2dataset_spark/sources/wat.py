@@ -1,18 +1,23 @@
 """WAT/WARC sources (SURVEY.md §2.1 S1-S10).
 
-One ingestion path, ``read_wat_archives``: real gzipped WARC archives.
-Python frames, Spark parses. WARC framing has no Spark primitive for
-``https://`` archives, so a ``mapInArrow`` over the paths (one Spark
-partition per WAT path exactly like the reference's
-``sc.parallelize(paths, len(paths))`` at main.py:274) opens, retries
-and frames each archive, and hands Spark its raw metadata payloads as
-``value: binary`` Arrow batches. Spark parses them with ``from_json``
-and ``WAT_SCHEMA``: one row per record, schema-on-read with no
-inference, a malformed payload as an all-null row. The envelope guards
-of ``operators/extraction.py`` drop that row, mirroring the reference's
-skip-and-log at main.py:139-143. The per-archive function ships by
-value, so executors need only pyspark; fastwarc and fsspec are used
-when installed.
+One ingestion path, ``read_wat_archives``: real gzipped WARC archives,
+selected by scheme. Every path Hadoop can open (local, ``file:``,
+``s3a:``, ``hdfs:``, and ``s3://`` rewritten to ``s3a://``) is read by
+``spark.read.text``: Hadoop's gzip codec streams the concatenated
+record members, gzip is not splittable so each archive is one task,
+and a WAT metadata payload is the one line of a record that starts
+with ``{``. Only ``http(s)://`` archives, which Hadoop cannot list,
+are framed in Python: a ``mapInArrow`` over the paths (one Spark
+partition per path, like the reference's ``sc.parallelize(paths,
+len(paths))`` at main.py:274) opens, retries and frames each archive
+and hands Spark its raw metadata payloads. Either way Spark parses
+the payloads with ``from_json`` and ``WAT_SCHEMA``: one row per
+record, schema-on-read with no inference, a malformed payload as an
+all-null row. The envelope guards of ``operators/extraction.py`` drop
+that row, mirroring the reference's skip-and-log at main.py:139-143.
+A pipeline over local, ``s3a`` or ``hdfs`` paths starts no Python
+worker; the https framer ships by value, so executors need only
+pyspark, and uses fastwarc and fsspec when installed.
 
 Index discovery (S1-S5) lists crawl indexes and samples WAT paths;
 network listing is driver-side (it is a metadata operation), the
@@ -196,15 +201,26 @@ def get_cc_wat_index_links(
     raise ValueError(f"Unknown protocol {source_cc_protocol}")
 
 
+def _hadoop_path(path: str) -> str:
+    """Hadoop 3 ships only the ``s3a://`` S3 filesystem (``s3://`` and
+    ``s3n://`` were removed), so an ``s3://`` path is read as
+    ``s3a://``."""
+    return "s3a://" + path[len("s3://"):] if path.startswith("s3://") else path
+
+
 def derive_wat_prefix(index_path: str) -> str:
     """The path prefix that makes a crawl index's BUCKET-RELATIVE
     entries ('crawl-data/CC-MAIN-.../....warc.wat.gz') openable, from
     the index file's own location: an s3/s3a commoncrawl index needs
     the bucket prefix, an https one the public gateway. '' for
     local/unknown layouts (caller supplies ``prefix`` explicitly).
-    Silent-empty-run guard: without a prefix the relative entries look
-    like missing LOCAL files on every executor, the retry/skip tiers
-    swallow them, and the pipeline 'succeeds' with zero rows."""
+    Silent-empty-run guard: without a prefix the relative entries are
+    LOCAL paths that do not exist. ``read_wat_archives`` then fails
+    loudly as it builds the frame (``PATH_NOT_FOUND``, with or without
+    ``spark.sql.files.ignoreMissingFiles``: Spark checks every root path
+    it is given), where the Python framer used to retry each one for
+    ~15 s, skip it and let the pipeline 'succeed' with zero rows. Only
+    ``http(s)://`` archives still go through that retry/skip tier."""
     for scheme in ("s3://", "s3a://"):
         if index_path.startswith(scheme + "commoncrawl/"):
             return scheme + "commoncrawl/"
@@ -277,12 +293,7 @@ def read_wat_index(
                 if line.strip()
             )
         else:
-            hp = (
-                "s3a://" + ip[len("s3://"):]
-                if ip.startswith("s3://")
-                else ip
-            )
-            hadoop_paths.append((hp, pfx))
+            hadoop_paths.append((_hadoop_path(ip), pfx))
     by_prefix: dict[str, list[str]] = {}
     for hp, pfx in hadoop_paths:
         by_prefix.setdefault(pfx, []).append(hp)
@@ -297,8 +308,10 @@ def read_wat_index(
 
 
 # ---------------------------------------------------------------------------
-# Archive source (S6-S10) — one mapInArrow task per archive
+# Archive source (S6-S10) — Hadoop reads the archives; http(s) in Python
 # ---------------------------------------------------------------------------
+
+_HTTP = ("http://", "https://")
 
 # Payloads per Arrow batch: bounds what an archive task holds in flight
 # and keeps each binary array far below Arrow's 2 GB int32 offset limit.
@@ -306,10 +319,11 @@ BATCH_RECORDS = 1024
 
 
 def make_wat_batch_reader():
-    """Build the per-archive function of :func:`read_wat_archives`:
-    WAT path -> one-column ``value: binary`` ``pyarrow.RecordBatch`` es
-    of raw metadata payloads, ``BATCH_RECORDS`` per batch, in archive
-    order. Spark parses them (see :func:`read_wat_archives`).
+    """Build the per-archive function of the ``http(s)://`` branch of
+    :func:`read_wat_archives`: WAT path -> one-column ``value: binary``
+    ``pyarrow.RecordBatch`` es of raw metadata payloads,
+    ``BATCH_RECORDS`` per batch, in archive order. Spark parses them
+    (see :func:`read_wat_archives`).
 
     Built in a factory like ``warc_fallback.make_warc_record_iterator``:
     cloudpickle ships a function whose qualname is not importable BY
@@ -410,19 +424,16 @@ def make_wat_batch_reader():
 iter_wat_batches = make_wat_batch_reader()
 
 
-def read_wat_archives(spark: SparkSession, wat_paths: list[str]) -> DataFrame:
-    """WAT archives -> DataFrame[WAT_SCHEMA], one row per metadata
-    record, in archive order.
+def _framed_payloads(spark: SparkSession, wat_paths: list[str]) -> DataFrame:
+    """The Python framer: WAT paths -> one-column ``value: string``
+    frame of raw metadata payloads, one Spark partition per path.
 
-    One Spark partition per WAT path so a 100 TB crawl parallelizes to
-    one task per ~1 GB archive with no skew (reference main.py:273-274).
     Each task receives only its own path: ``parallelize`` pickles the
     list once on the driver, one path per slice, and the JVM unpickles
     it the way ``createDataFrame`` does a local list. No Python worker
     feeds the paths, and the function shipped to every task is the same
     few kilobytes whatever the path count. Each task runs
-    :func:`iter_wat_batches` on its path in a ``mapInArrow``, and Spark
-    parses the payloads.
+    :func:`iter_wat_batches` on its path in a ``mapInArrow``.
     """
     sc = spark.sparkContext
     jvm = sc._jvm
@@ -440,14 +451,43 @@ def read_wat_archives(spark: SparkSession, wat_paths: list[str]) -> DataFrame:
                 yield from iter_wat_batches(path)
 
     # binary, not string: one non-UTF-8 payload would fail its whole
-    # batch's Arrow string array
+    # batch's Arrow string array. The cast to string is unvalidated, as
+    # Hadoop's lines are, and Jackson reads either as UTF-8, so a
+    # non-UTF-8 byte becomes U+FFFD.
     payloads = paths.mapInArrow(archives, "value binary")
-    # Binary is cast to string unvalidated and Jackson reads it as
-    # UTF-8, so a non-UTF-8 byte becomes U+FFFD; a malformed payload
-    # becomes an all-null row. ``inline(array(from_json(...)))`` is a
-    # ``Generate``, so the parse runs once per record:
-    # ``select(from_json(...).alias("r")).select("r.*")`` would let the
-    # optimizer copy the parse into the envelope guards' ``Filter`` and
-    # run it three times.
-    parsed = F.from_json(F.col("value").cast("string"), WAT_SCHEMA)
-    return payloads.select(F.inline(F.array(parsed)))
+    return payloads.select(F.col("value").cast("string"))
+
+
+def read_wat_archives(spark: SparkSession, wat_paths: list[str]) -> DataFrame:
+    """WAT archives -> DataFrame[WAT_SCHEMA], one row per metadata
+    record, each archive's rows in archive order.
+
+    The reader is chosen by each path's scheme. Hadoop reads every path
+    it can open (``s3://`` is read as ``s3a://``) as text, in the JVM:
+    gzip is not splittable, so each archive is one task whatever
+    ``spark.sql.files.maxPartitionBytes`` says, though Spark may pack
+    several small archives into one task. A WAT record's metadata
+    payload is one JSON line, so the lines that start with ``{`` are
+    the payloads; the WARC headers and the warcinfo record are not. A
+    missing path fails here, when the frame is built; an archive that
+    fails mid-read (a truncated gzip) keeps the lines read before the
+    failure (``ignoreCorruptFiles``, set on this read only), and Spark
+    logs one warning naming it. ``http(s)://`` paths, which Hadoop
+    cannot list, go through :func:`_framed_payloads`. A list that mixes
+    the two is read as the union of both, parsed by the one decoder.
+    """
+    http = [p for p in wat_paths if p.startswith(_HTTP)]
+    hadoop = [_hadoop_path(p) for p in wat_paths if not p.startswith(_HTTP)]
+    values = None
+    if hadoop or not http:
+        lines = spark.read.option("ignoreCorruptFiles", "true").text(hadoop)
+        values = lines.where(F.col("value").startswith("{"))
+    if http:
+        framed = _framed_payloads(spark, http)
+        values = framed if values is None else values.unionByName(framed)
+    # A malformed payload becomes an all-null row.
+    # ``inline(array(from_json(...)))`` is a ``Generate``, so the parse
+    # runs once per record: ``select(from_json(...).alias("r")).select("r.*")``
+    # would let the optimizer copy the parse into the envelope guards'
+    # ``Filter`` and run it three times.
+    return values.select(F.inline(F.array(F.from_json("value", WAT_SCHEMA))))

@@ -46,10 +46,10 @@ def test_unknown_document_type_raises(spark, wat_df):
         extract_document_links(wat_df, "bogus")
 
 
-# Plan-node patterns: Spark's source scans print as "Scan ExistingRDD"
-# (the archive reader's path feed, under its one MapInArrow), "FileScan"
-# and "BatchScan"; the Python boundary prints as ArrowEvalPython
-# or BatchEvalPython.
+# Plan-node patterns: Spark's source scans print as "FileScan" (the
+# archive reader's Hadoop text scan), "Scan ExistingRDD" (the https
+# framer's path feed) and "BatchScan"; the Python boundary prints as
+# MapInArrow, ArrowEvalPython or BatchEvalPython.
 _SCAN = re.compile(r"\b(File|Batch)?Scan\b")
 _PY_EVAL = re.compile(r"(Arrow|Batch)EvalPython")
 
@@ -58,19 +58,21 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_extraction_plan_scans_once_and_crosses_python_only_at_the_source(spark):
-    """Each WAT is decoded once and Python runs only in the source: the
-    executed plan has one source scan, one JSON parse, one MapInArrow and
-    no Python evaluation. (A ``select("r.*")`` over the parsed struct would
-    copy the parse into the guard Filter: three ``from_json``.) The link
-    join is evaluated once per link: its dot-segment stack appears once,
-    not copied into a Filter or a second projection."""
+def test_extraction_plan_scans_once_and_never_crosses_python(spark):
+    """Each WAT is decoded once and a local archive never enters Python:
+    the executed plan has one Hadoop file scan, one JSON parse, no
+    MapInArrow and no Python evaluation. (A ``select("r.*")`` over the
+    parsed struct would copy the parse into the guard Filter: three
+    ``from_json``.) The link join is evaluated once per link: its
+    dot-segment stack appears once, not copied into a Filter or a
+    second projection."""
     df = extract_document_links(read_wat_archives(spark, [FIXTURE_PATH]), "image")
     plan = _plan(df)
     lines = plan.splitlines()
     assert sum(1 for l in lines if _SCAN.search(l)) == 1
+    assert sum(1 for l in lines if "FileScan text" in l) == 1
     assert plan.count("from_json(") == 1
-    assert sum(1 for l in lines if "MapInArrow" in l) == 1
+    assert sum(1 for l in lines if "MapInArrow" in l) == 0
     assert sum(1 for l in lines if _PY_EVAL.search(l)) == 0
     assert len(re.findall(r"aggregate\(split\(__join_segs#", plan)) == 1
     got = sorted(tuple(r) for r in df.collect())
@@ -79,14 +81,32 @@ def test_extraction_plan_scans_once_and_crosses_python_only_at_the_source(spark)
 
 def test_scan_pattern_counts_each_archive_read(spark):
     """The scan pattern sees every archive read: a union of two reads
-    has two scans and two MapInArrow nodes, so the one-source assertions
-    above fail on a plan that decodes the archives twice."""
+    has two scans and no MapInArrow, so the one-source assertions above
+    fail on a plan that decodes the archives twice."""
     twice = read_wat_archives(spark, [FIXTURE_PATH]).unionByName(
         read_wat_archives(spark, [FIXTURE_PATH])
     )
     lines = _plan(extract_document_links(twice, "image")).splitlines()
     assert sum(1 for l in lines if _SCAN.search(l)) == 2
-    assert sum(1 for l in lines if "MapInArrow" in l) == 2
+    assert sum(1 for l in lines if "MapInArrow" in l) == 0
+
+
+def test_mixed_schemes_union_before_one_decoder(spark):
+    """A path list that mixes a local archive with an https one reads
+    each with its own reader and parses the union of their payloads
+    once: one FileScan, one MapInArrow over the path feed, one
+    ``from_json``. (Planned only: the https archive is not fetched.)"""
+    df = read_wat_archives(
+        spark, [FIXTURE_PATH, "https://data.commoncrawl.org/a.warc.wat.gz"]
+    )
+    assert df.schema == WAT_SCHEMA
+    plan = _plan(df)
+    lines = plan.splitlines()
+    assert sum(1 for l in lines if "FileScan text" in l) == 1
+    assert sum(1 for l in lines if "Scan ExistingRDD" in l) == 1
+    assert sum(1 for l in lines if "MapInArrow" in l) == 1
+    assert sum(1 for l in lines if l.lstrip(" +-:").startswith("Union")) == 1
+    assert plan.count("from_json(") == 1
 
 
 # (page_url, base_raw, url) -> the absolute http(s) URL kept, or []. The

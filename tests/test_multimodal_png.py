@@ -514,7 +514,9 @@ def test_decode_media_errors_status_and_skip(spark):
 def test_resize_media_errors_and_source_format(spark):
     """resize_media mirrors decode_media's policy and carries
     provenance: re-encoded images report format='png' but keep the
-    original tag in source_format (ADVICE r11)."""
+    original tag in source_format (ADVICE r11). The expected-failure
+    job runs last: its stage is cancelled, and no later job of this
+    test reuses a Python worker whose channel the cancellation closed."""
     from cc2dataset_spark.operators import multimodal as MM
     from cc2dataset_spark.operators.jpeg import encode_jpeg
 
@@ -522,9 +524,6 @@ def test_resize_media_errors_and_source_format(spark):
     gated = _arith_jpeg()
     rows = [(1, jpg, "jpeg"), (2, gated, "jpeg"), (3, b"xyz", "webp")]
     df = _media_df(spark, rows)
-
-    with pytest.raises(Exception, match="(?i)jpeg|sof|baseline|arith"):
-        MM.resize_media(df, 4, 4).collect()
 
     got = {r.doc_id: r for r in MM.resize_media(df, 4, 4, errors="status").collect()}
     assert got[1].status == "ok"
@@ -536,6 +535,9 @@ def test_resize_media_errors_and_source_format(spark):
 
     kept = MM.resize_media(df, 4, 4, errors="skip").collect()
     assert sorted(r.doc_id for r in kept) == [1, 3]
+
+    with pytest.raises(Exception, match="(?i)jpeg|sof|baseline|arith"):
+        MM.resize_media(df, 4, 4).collect()
 
 
 def test_hand_vector_sub8_greyscale():

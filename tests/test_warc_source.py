@@ -1,5 +1,7 @@
-"""Archive-source tests (S6/S7, sources/wat.read_wat_archives and its
-per-archive function ``iter_wat_batches``).
+"""Archive-source tests (S6/S7, sources/wat.read_wat_archives: Hadoop's
+text reader for local paths, and the https branch's Python framer, its
+per-archive function ``iter_wat_batches``, which these tests call
+directly on local paths).
 
 The checked-in tiny.wat.warc.gz fixture holds the SAME envelopes as
 tests/wat_fixtures.FIXTURE_RECORDS plus a warcinfo record and a
@@ -19,7 +21,9 @@ assertions cover the fast path instead.
 
 from __future__ import annotations
 
+import contextlib
 import copy
+import gzip
 import io
 import os
 import subprocess
@@ -29,11 +33,13 @@ import types
 
 import pyarrow as pa
 import pytest
+from pyspark.sql import functions as F
 
 from cc2dataset_spark.operators.extraction import extract_document_links
 from cc2dataset_spark.sources.wat import (
     BATCH_RECORDS,
     WAT_SCHEMA,
+    _framed_payloads,
     iter_wat_batches,
     read_wat_archives,
 )
@@ -48,8 +54,6 @@ _FIXTURE_PAYLOADS = len(FIXTURE_RECORDS) + 1
 def test_fixture_is_deterministic_and_checked_in():
     """The committed bytes must equal a fresh rebuild (mtime=0 gzip)."""
     assert os.path.exists(FIXTURE_PATH), "run tests/fixtures/build_tiny_wat.py"
-    import gzip
-
     with open(FIXTURE_PATH, "rb") as f:
         committed = f.read()
     assert gzip.decompress(committed) == build_warc_bytes()
@@ -181,9 +185,28 @@ def test_file_tier_drops_already_extracted_records(spark, tmp_path):
     assert _extract(df) == _oracle([FIXTURE_RECORDS[0]] * 3)
 
 
+@contextlib.contextmanager
+def _session_conf(spark, confs: dict):
+    """Set session confs for the block and restore them after it."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_wat_source_one_partition_per_archive(spark, tmp_path):
-    """The archive scan plans one partition per input archive, so a
-    failing file drops only its own partition's rows."""
+    """Each archive is read by one task, so a failing file drops only
+    its own rows. Spark orders files by size, so the per-partition
+    counts are a multiset. Gzip is not splittable: with a 1 KB split
+    size an archive 15 times larger is still one partition, where the
+    same bytes uncompressed are split."""
     good = payload(FIXTURE_RECORDS[0])
     paths = [
         write_wat_archive(tmp_path / f"{name}.warc.gz", [good] * n)
@@ -191,13 +214,26 @@ def test_wat_source_one_partition_per_archive(spark, tmp_path):
     ]
     df = read_wat_archives(spark, paths)
     assert df.rdd.getNumPartitions() == len(paths)
-    assert df.rdd.glom().map(len).collect() == [1, 2, 3]
+    assert sorted(df.rdd.glom().map(len).collect()) == [1, 2, 3]
+
+    big = write_wat_archive(tmp_path / "big.warc.gz", [good] * 3000)
+    plain = tmp_path / "big.warc"
+    with open(big, "rb") as f:
+        plain.write_bytes(gzip.decompress(f.read()))
+    assert os.path.getsize(big) > 15 * 1024
+    split = {"spark.sql.files.maxPartitionBytes": "1k", "spark.sql.files.openCostInBytes": "0"}
+    with _session_conf(spark, split):
+        df = read_wat_archives(spark, [big])
+        assert df.rdd.getNumPartitions() == 1
+        assert df.count() == 3000
+        assert read_wat_archives(spark, [str(plain)]).rdd.getNumPartitions() > 1
 
 
 def test_source_function_does_not_grow_with_the_path_count(spark, monkeypatch):
-    """Every task unpickles the function handed to mapInArrow, so it
-    must not carry the path list: its pickle is the same for one path
-    and for 10,000 (each task gets its own path from its partition)."""
+    """Every task of the https framer unpickles the function handed to
+    mapInArrow, so it must not carry the path list: its pickle is the
+    same for one path and for 10,000 (each task gets its own path from
+    its partition). Building the frame opens no archive."""
     from pyspark import cloudpickle
 
     frame = type(spark.range(1))
@@ -209,10 +245,72 @@ def test_source_function_does_not_grow_with_the_path_count(spark, monkeypatch):
         return real(self, func, schema, *args, **kwargs)
 
     monkeypatch.setattr(frame, "mapInArrow", spy)
-    read_wat_archives(spark, [FIXTURE_PATH])
-    many = read_wat_archives(spark, [f"/wat/{i:05d}.warc.wat.gz" for i in range(10_000)])
+    url = "https://data.commoncrawl.org/wat/{:05d}.warc.wat.gz"
+    read_wat_archives(spark, [url.format(0)])
+    many = read_wat_archives(spark, [url.format(i) for i in range(10_000)])
     assert many.rdd.getNumPartitions() == 10_000
     assert len(sizes) == 2 and sizes[0] == sizes[1]
+
+
+def _framer_rows(spark, paths) -> list:
+    """The Python framer's rows, through the reader's decoder."""
+    values = _framed_payloads(spark, paths)
+    return values.select(F.inline(F.array(F.from_json("value", WAT_SCHEMA)))).collect()
+
+
+def test_jvm_reader_matches_python_framer_on_payload_edges(spark, tmp_path):
+    """Hadoop's lines and the Python framer's payloads decode to the
+    same rows, in order, on every payload edge the reader pins."""
+    archive = write_wat_archive(tmp_path / "parity.warc.gz", _parity_payloads())
+    jvm = read_wat_archives(spark, [archive]).collect()
+    assert len(jvm) == len(_parity_payloads())
+    assert jvm == _framer_rows(spark, [archive])
+
+
+def test_payload_with_a_raw_line_break_splits_in_the_jvm_reader(spark, tmp_path):
+    """The one known difference between the two readers: Hadoop splits
+    a payload at a raw LF (valid JSON whitespace), so its first line is
+    a malformed row and the rest are not payloads, where the Python
+    framer parses the whole payload. Common Crawl writes each payload
+    on one line."""
+    good = _good()
+    broken = payload(good).replace(b',"Container"', b',\n"Container"')
+    archive = write_wat_archive(tmp_path / "lf.warc.gz", [broken, payload(good)])
+    jvm = [r.asDict(recursive=True) for r in read_wat_archives(spark, [archive]).collect()]
+    assert jvm == [{"Envelope": None, "Container": None}, good]
+    framer = [r.asDict(recursive=True) for r in _framer_rows(spark, [archive])]
+    assert framer == [good, good]
+
+
+def test_truncated_gzip_keeps_the_records_before_the_cut(spark, tmp_path):
+    """An archive whose gzip stream ends early keeps every record read
+    before the cut, in order, as the Python framer does, and the read
+    does not fail."""
+    n = 3000
+    full = write_wat_archive(tmp_path / "full.warc.gz", _numbered_records(n))
+    with open(full, "rb") as f:
+        raw = f.read()
+    cut = tmp_path / "cut.warc.gz"
+    cut.write_bytes(raw[: len(raw) * 2 // 3])
+    rows = read_wat_archives(spark, [str(cut)]).collect()
+    urls = [r.Envelope["WARC-Header-Metadata"]["WARC-Target-URI"] for r in rows]
+    assert n // 2 < len(urls) < n
+    assert urls == [f"http://e.com/{i}" for i in range(len(urls))]
+    assert _rows(iter_wat_batches(str(cut))) == len(urls)
+
+
+def test_missing_local_path_fails_when_the_frame_is_built(spark, tmp_path):
+    """A missing Hadoop path raises PATH_NOT_FOUND as soon as the frame
+    is built, also under ``ignoreMissingFiles``: a wrong prefix fails
+    the run instead of letting it succeed with zero rows."""
+    from pyspark.errors import AnalysisException
+
+    missing = str(tmp_path / "crawl-data" / "missing.warc.wat.gz")
+    for value in ("false", "true"):
+        with _session_conf(spark, {"spark.sql.files.ignoreMissingFiles": value}):
+            with pytest.raises(AnalysisException) as err:
+                read_wat_archives(spark, [FIXTURE_PATH, missing])
+        assert err.value.getCondition() == "PATH_NOT_FOUND"
 
 
 def _numbered_records(n: int) -> list[bytes]:
